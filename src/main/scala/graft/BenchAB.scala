@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B bench: separates HOST DRIFT from STRUCTURAL REGRESSION.
   *
   * The round-7 closing runs (187.2 / 217.5 / 234.6 s as the catalog grew
@@ -45,7 +43,6 @@ object BenchAB {
     val priorPath = args.headOption.getOrElse("BENCH_local_r6.json")
     val outPath = if (args.length > 1) args(1) else "BENCH_AB_latest.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 
     // Prior artifact: {"queries":{name:sec,...}} — parse with Spark's shaded
     // Jackson (no extra deps allowed in this build).
@@ -59,15 +56,8 @@ object BenchAB {
       b.result()
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // long catalog passes: periodic driver GC keeps per-query shuffles from piling up
+    val spark = GraftSession.create(Bench.sessionConf)
     Tables.register(spark, sfDir)
 
     val all = SparkEntry.queries
@@ -78,19 +68,13 @@ object BenchAB {
     def runPass(tag: String, names: Seq[String]): Map[String, Double] = {
       System.gc()
       names.map { name =>
-        val fn = all(name)
-        val t0 = System.nanoTime()
-        val sec =
-          try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable => System.err.println(s"[benchAB] $tag $name FAILED: ${e.getMessage}"); -1.0 }
-        name -> sec
+        name -> Bench.seconds(all(name)(spark, sfDir),
+          e => System.err.println(s"[benchAB] $tag $name FAILED: ${e.getMessage}"))
       }.toMap
     }
 
     // Untimed warmup over the full catalog (JIT, file index, page cache).
-    all.foreach { case (_, fn) =>
-      try fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()) catch { case _: Throwable => () }
-    }
+    all.foreach { case (_, fn) => Bench.seconds(fn(spark, sfDir)) }
 
     // Interleave: A,B,A,B in one window.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
@@ -103,10 +87,8 @@ object BenchAB {
       bPasses += runPass(s"p${i}B", allNames)
     }
 
-    def best(passes: Seq[Map[String, Double]], name: String): Double = {
-      val ts = passes.flatMap(_.get(name)).filter(_ >= 0)
-      if (ts.nonEmpty) ts.min else -1.0
-    }
+    def best(passes: Seq[Map[String, Double]], name: String): Double =
+      Bench.best(passes.flatMap(_.get(name)))
 
     val perQuery = allNames.map { n =>
       val a = if (prior.contains(n)) best(aPasses.toSeq, n) else -1.0

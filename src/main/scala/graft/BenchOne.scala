@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query profiler: compares evaluation strategies.
   * Usage: BenchOne <sfDir> <queryName> */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     Tables.register(spark, sfDir)
     if (name == "cosine_native_vs_hof") {
       // all-pairs within a 500-row slice: 250k scoring ops per formulation
@@ -238,43 +227,6 @@ object BenchOne {
       run("10x")
       spark.stop(); return
     }
-    if (name == "range_join_rule") {
-      // interval join: naive BroadcastNestedLoopJoin vs the BinnedRangeJoinRule
-      // rewrite (same SQL, rule enabled via conf). supplier x customer at
-      // sf0.1 = 15M candidate pairs naive.
-      val sql = """SELECT s_suppkey, COUNT(*) AS n_cust
-        FROM supplier JOIN customer
-          ON c_acctbal BETWEEN s_acctbal - 500 AND s_acctbal + 500
-        GROUP BY s_suppkey ORDER BY s_suppkey"""
-      def run(scale: String, reps: Int): Unit =
-        for (i <- 1 to reps; (label, width) <- Seq("naive" -> "", "binned" -> "250")) {
-          if (width.isEmpty) spark.conf.unset(graft.plans.BinnedRangeJoinRule.WidthKey)
-          else spark.conf.set(graft.plans.BinnedRangeJoinRule.WidthKey, width)
-          val t0 = System.nanoTime()
-          val n = spark.sql(sql).collect().length
-          println(f"$scale run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n groups)")
-        }
-      run("1x", 3)
-      // 10x both sides with acctbal (the join column) shifted per replica so
-      // each replica only range-matches its own copy — per-replica fan-out is
-      // preserved, matching the tpch_scale methodology (a key-only shift
-      // would multiply matches 100x and overstate the naive join's blowup).
-      import org.apache.spark.sql.functions._
-      val sup = spark.table("supplier")
-      val cust = spark.table("customer")
-      spark.range(0, 10).crossJoin(sup)
-        .withColumn("s_suppkey", col("s_suppkey") + col("id") * 10000000L)
-        .withColumn("s_acctbal", col("s_acctbal") + col("id") * 1000000.0)
-        .drop("id").createOrReplaceTempView("supplier")
-      spark.range(0, 10).crossJoin(cust)
-        .withColumn("c_custkey", col("c_custkey") + col("id") * 10000000L)
-        .withColumn("c_acctbal", col("c_acctbal") + col("id") * 1000000.0)
-        .drop("id").createOrReplaceTempView("customer")
-      println(s"suppliers: ${spark.table("supplier").count()}, customers: ${spark.table("customer").count()}")
-      run("10x", 2)
-      spark.conf.unset(graft.plans.BinnedRangeJoinRule.WidthKey)
-      spark.stop(); return
-    }
     if (name == "textdup_scale") {
       // 10x corpus (tokens salted per copy, ids shifted — replicas are not
       // cross-copy dups): q46's exploded-trigram equi-join and the banded
@@ -484,47 +436,6 @@ object BenchOne {
         val t0 = System.nanoTime()
         val n = spark.sql(pruned + s"SELECT COUNT(*) AS n FROM $stage").collect()(0).getLong(0)
         println(f"run$i pruned-$stage%-6s rows=$n%9d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "q380_stages") {
-      // VERDICT r14 #5: attribute q380's cost — the simhash detector pass vs
-      // the exact-ground-truth stages (gram explodes, candidate join, verify
-      // intersection). Same CTE-prefix discipline as funnel_stage_profile.
-      val np = pipeline.Ops.sessionPartitions(spark)
-      for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        val sim = pipeline.Dedup.simhashNearDup(spark, sfDir)
-        val nsim = sim.count()
-        println(f"run$i simhashNearDup: ${(System.nanoTime() - t0) / 1e9}%7.3f s ($nsim pairs)")
-        val prefix =
-          s"""WITH w AS (SELECT /*+ REPARTITION($np, doc_id) */ doc_id,
-            |             split(lower(text), ' ') AS w FROM documents),
-            |g8 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w) - 7),
-            |         i -> concat_ws(' ', slice(w, i, 8))))) AS g FROM w WHERE size(w) >= 8),
-            |gc AS (SELECT g FROM g8 GROUP BY g HAVING COUNT(*) BETWEEN 2 AND 32),
-            |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-            |         FROM g8 a JOIN gc USING (g) JOIN g8 b USING (g) WHERE a.doc_id < b.doc_id),
-            |s3 AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w) - 2),
-            |         i -> concat_ws(' ', w[i-1], w[i], w[i+1])))) AS g FROM w WHERE size(w) >= 3),
-            |sz AS (SELECT doc_id, COUNT(*) AS n FROM s3 GROUP BY doc_id),
-            |inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS i
-            |          FROM cand c JOIN s3 sa ON sa.doc_id = c.a_id
-            |          JOIN s3 sb ON sb.doc_id = c.b_id AND sa.g = sb.g
-            |          GROUP BY c.a_id, c.b_id),
-            |exact AS (SELECT a_id, b_id FROM inter
-            |          JOIN sz na ON na.doc_id = a_id JOIN sz nb ON nb.doc_id = b_id
-            |          WHERE (20000 * i + (na.n + nb.n - i)) DIV (2 * (na.n + nb.n - i)) >= 9000)
-            |""".stripMargin
-        for (stage <- Seq("g8", "gc", "cand", "s3", "inter", "exact")) {
-          t0 = System.nanoTime()
-          val n = spark.sql(prefix + s"SELECT COUNT(*) AS n FROM $stage").collect()(0).getLong(0)
-          println(f"run$i $stage%-6s rows=$n%9d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
-        t0 = System.nanoTime()
-        SparkEntry.queries("q380_detector_agreement")(spark, sfDir)
-          .queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i full q380: ${(System.nanoTime() - t0) / 1e9}%7.3f s")
       }
       spark.stop(); return
     }

@@ -209,16 +209,8 @@ object BenchScale {
       case None => BenchScale.entries
       case Some(fs) => BenchScale.entries.filter(e => fs.exists(e.name.contains))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // long catalog passes: periodic driver GC keeps per-query shuffles from piling up
+    val spark = GraftSession.create(Bench.sessionConf)
     Tables.register(spark, sfDir)
 
     val work = java.nio.file.Paths.get(
@@ -259,25 +251,32 @@ object BenchScale {
     // negative fitted exponents on the cheap entries).
     System.err.println(s"[scale] warmup pass on the 1x fixture")
     entries.foreach { e =>
-      try SparkEntry.queries(e.name)(spark, dirFor(e, 1)).queryExecution.toRdd.foreach(_ => ())
-      catch { case t: Throwable => System.err.println(s"[scale] warmup ${e.name} FAILED: $t") }
+      Bench.seconds(SparkEntry.queries(e.name)(spark, dirFor(e, 1)),
+        t => System.err.println(s"[scale] warmup ${e.name} FAILED: $t"))
+    }
+    // One timed run: seconds and output rows (rows prove the work actually
+    // scaled). A failed run aborts the whole run — an exponent fitted over
+    // a missing point would be meaningless.
+    def timed(e: Entry, k: Int): (Double, Long) = {
+      val rows = spark.sparkContext.longAccumulator
+      var failure: Throwable = null
+      val sec = Bench.seconds(SparkEntry.queries(e.name)(spark, dirFor(e, k)),
+        t => failure = t, _ => rows.add(1))
+      if (sec < 0) throw failure
+      (sec, rows.value)
     }
     for (k <- scales) {
       System.err.println(s"[scale] ${k}x fixtures")
       // two passes over all entries (min absorbs one contention window;
-      // pass 1 additionally counts rows to prove the work actually scaled)
+      // pass 1's row count is the one recorded)
       val pass1 = entries.map { e =>
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(e.name)(spark, dirFor(e, k)).queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, rows) = timed(e, k)
         System.err.println(f"[scale] ${k}x p1 ${e.name}%-36s $sec%8.3f s  rows=$rows")
         e.name -> (sec, rows)
       }.toMap
       System.gc()
       val pass2 = entries.map { e =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(e.name)(spark, dirFor(e, k)).queryExecution.toRdd.foreach(_ => ())
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, _) = timed(e, k)
         System.err.println(f"[scale] ${k}x p2 ${e.name}%-36s $sec%8.3f s")
         e.name -> sec
       }.toMap
@@ -293,10 +292,7 @@ object BenchScale {
     for (pass <- 1 to 2) {
       System.gc()
       for (e <- deepEntries) {
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(e.name)(spark, dirFor(e, deepScaleK))
-          .queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, rows) = timed(e, deepScaleK)
         System.err.println(f"[scale] ${deepScaleK}x p$pass ${e.name}%-36s $sec%8.3f s  rows=$rows")
         val prior = timings(e.name).get(deepScaleK).map(_._1).getOrElse(Seq.empty)
         timings(e.name) = timings(e.name) + (deepScaleK -> (prior :+ sec, rows))

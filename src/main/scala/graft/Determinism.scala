@@ -91,13 +91,7 @@ object Determinism {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val filters = if (args.length > 1) args(1).split(',').toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val names = batchNames.filter(n => filters.exists(n.contains)).sorted
     val results = check(spark, sfDir, names)
     results.foreach { case (n, ok, d) =>

@@ -1,0 +1,27 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one way this repo builds a Spark session: `local[cpus]` with
+  * `shuffle.partitions = cpus`, AQE on, UTC, UI off and log level WARN.
+  * Native functions are not part of the build — they come from
+  * [[Tables.register]], the same call a session built elsewhere gets.
+  * Each caller passes only its own delta. */
+object GraftSession {
+
+  /** `SPARK_GRAFT_CPUS`, else every processor the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def create(conf: Map[String, String] = Map.empty, cpus: Int = GraftSession.cpus): SparkSession = {
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -19,13 +19,20 @@ import org.apache.spark.sql.SparkSession
   */
 object Preflight {
 
+  /** Innermost cause of `e` — the one worth a readable diagnosis line. */
+  def rootCause(e: Throwable): Throwable = {
+    var c = e
+    while (c.getCause != null && c.getCause != c) c = c.getCause
+    c
+  }
+
   /** Returns one diagnosis line per problem; Nil means all clear. */
   def check(spark: SparkSession, dir: String): Seq[String] = {
     def diag(stage: String)(body: => Unit): Option[String] =
       try { body; None }
       catch {
         case e: Throwable =>
-          val root = { var c = e; while (c.getCause != null && c.getCause != c) c = c.getCause; c }
+          val root = rootCause(e)
           val msg = Option(root.getMessage).getOrElse("").linesIterator.take(2).mkString(" / ")
           Some(s"$stage: ${root.getClass.getSimpleName}: $msg")
       }
@@ -61,18 +68,13 @@ object Preflight {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Fixed at 4: a smoke check of the fixtures, not of the host's width.
+    val spark = GraftSession.create(cpus = 4)
     val problems =
       try { Tables.register(spark, dir); check(spark, dir) }
       catch {
         case e: Throwable =>
-          val root = { var c = e; while (c.getCause != null && c.getCause != c) c = c.getCause; c }
+          val root = rootCause(e)
           Seq(s"register: ${root.getClass.getSimpleName}: ${Option(root.getMessage).getOrElse("")}")
       }
     if (problems.isEmpty) println(s"[preflight] OK: $dir")

@@ -130,8 +130,8 @@ object Tables {
     // ns-parquet read mode: session-level, set once here (inside register's
     // lock) rather than on every read() call.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Engine-native functions, registered at runtime so driver-provided
-    // sessions (no spark.sql.extensions) get them too.
+    // Engine-native functions: this is their only registration path, so a
+    // session built elsewhere gets exactly what the served one does.
     graft.functions.CosineSimilarity.register(spark)
     graft.functions.DotProduct.register(spark)
     graft.functions.LshCodes.register(spark)

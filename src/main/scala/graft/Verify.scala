@@ -1,27 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val usage = "usage: graft.Verify <sfDir> <outDir> [nameFilter,...]"
+
+  /** (sfDir, outDir, nameFilter); None for any other arg count. The
+    * optional third arg is comma-separated substring filters over query
+    * names (local iteration only — the correctness gate passes two args =
+    * run everything; a name matching ANY listed substring runs). */
+  def parseArgs(args: Array[String]): Option[(String, String, String)] = args match {
+    case Array(s, o) => Some((s, o, ""))
+    case Array(s, o, f) => Some((s, o, f))
+    case _ => None
+  }
+
   def main(args: Array[String]): Unit = {
-    // Optional third arg: comma-separated substring filters over query names
-    // (local iteration only — the driver always passes two args = run
-    // everything; a name matching ANY listed substring runs).
-    val (sfDir, outDir, nameFilter) = args match {
-      case Array(s, o) => (s, o, "")
-      case Array(s, o, f) => (s, o, f)
+    val (sfDir, outDir, nameFilter) = parseArgs(args).getOrElse {
+      System.err.println(usage)
+      sys.exit(2)
     }
     val filters = nameFilter.split(',').toSeq
     def matches(name: String): Boolean = filters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // Preflight with readable diagnosis (round-6 lesson): a broken fixture
     // assumption must surface as one clear line per problem, not as 298
@@ -30,7 +31,7 @@ object Verify {
       Tables.register(spark, sfDir)
       Preflight.check(spark, sfDir).foreach(p => System.err.println(s"[verify][preflight] $p"))
     } catch { case e: Throwable =>
-      val root = { var c = e; while (c.getCause != null && c.getCause != c) c = c.getCause; c }
+      val root = Preflight.rootCause(e)
       System.err.println(s"[verify][preflight] register FAILED: ${root.getClass.getName}: ${root.getMessage}")
     }
     SparkEntry.queries.filter(kv => matches(kv._1)).foreach { case (name, fn) =>

@@ -106,8 +106,8 @@ object CosineSimilarity {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[CosineSimilarity].getCanonicalName, "cosine_similarity")
 
-  /** Runtime registration on any session (works on driver-provided sessions
-    * where spark.sql.extensions can no longer be set). */
+  /** Runtime registration on any session, however it was built; called
+    * by Tables.register. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity"),

@@ -91,8 +91,8 @@ object DotProduct {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[DotProduct].getCanonicalName, "dot_product")
 
-  /** Runtime registration on any session (works on driver-provided sessions
-    * where spark.sql.extensions can no longer be set). */
+  /** Runtime registration on any session, however it was built; called
+    * by Tables.register. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),

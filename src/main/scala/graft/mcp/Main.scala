@@ -2,8 +2,6 @@ package graft.mcp
 
 import java.io.BufferedReader
 
-import org.apache.spark.sql.SparkSession
-
 /** Parsed launch options: `dataDir` already has CLI-over-env precedence
   * applied (the reference's rule — entrypoint CLI args beat env vars,
   * /root/reference/images/snowflake-mcp/entrypoint.sh:104-190). */
@@ -21,6 +19,14 @@ final case class Launch(toolsFile: Option[String], dataDir: Option[String],
 object Main {
 
   val usage = "usage: graft.mcp.Main --stdio [--tools-file F] [--data-dir D] [--query-timeout-ms N]"
+
+  /** The served session's delta over [[graft.GraftSession]]: its app name,
+    * and defense in depth behind StatementGate's file-source deny — even if
+    * a file-backed relation slipped the parse-level gate, analysis refuses
+    * it. */
+  val sessionConf: Map[String, String] = Map(
+    "spark.app.name" -> "graft-mcp",
+    "spark.sql.runSQLOnFiles" -> "false")
 
   /** Pure flag parse (ConfigMatrixSpec) — exact error strings are part of
     * the contract, mirroring the reference's structured config errors. */
@@ -88,19 +94,7 @@ object Main {
     val toolsFile = launch.toolsFile
     val dataDir = launch.dataDir
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-mcp")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Defense in depth behind StatementGate's file-source deny: even if a
-      // file-backed relation slipped the parse-level gate, analysis refuses it.
-      .config("spark.sql.runSQLOnFiles", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create(sessionConf)
 
     val config = toolsFile.map(Config.loadFile).getOrElse(ToolboxConfig(Nil, Nil))
     dataDir.foreach(d => graft.Tables.register(spark, d))

@@ -90,9 +90,9 @@ object Ops {
     * (plans/AsOfJoinExec — LogicalPlan + SparkStrategy + SparkPlan): same
     * semantics and same shuffle envelope as [[asofJoin]], but a single
     * streaming merge pass instead of union widening + window buffering.
-    * The strategy self-registers on the session (idempotent) so
-    * driver-provided plain sessions work; build-time injection is also
-    * available via GraftExtensions. The right side is re-aliased so a
+    * The strategy self-registers on the session (idempotent) — the only
+    * way it is installed, so every session, built by GraftSession or
+    * elsewhere, plans it the same. The right side is re-aliased so a
     * self-join (both sides from one table) can't leak duplicate
     * attribute ids into the custom node. */
   def asofJoinNative(
@@ -144,7 +144,7 @@ object Ops {
       loCol: String,
       hiCol: String,
       binWidth: Double,
-      maxBinsPerInterval: Int = 10000): DataFrame = {
+      maxBins: Int = 10000): DataFrame = {
     require(binWidth > 0, "binWidth must be positive")
     require(!points.columns.contains("_bin") && !intervals.columns.contains("_bin"),
       "inputs must not already have a _bin column")
@@ -158,10 +158,10 @@ object Ops {
     // below the data's spans) would fan out pathologically — or overflow
     // Sequence's max length. Fail loudly with the fix instead of OOMing;
     // clamping would silently drop matches, so the predicate stays exact.
-    val guardedHi = when(hiBin - loBin > maxBinsPerInterval,
-      raise_error(concat(lit(s"rangeJoin: interval spans more than $maxBinsPerInterval bins " +
+    val guardedHi = when(hiBin - loBin > maxBins,
+      raise_error(concat(lit(s"rangeJoin: interval spans more than $maxBins bins " +
         s"(binWidth=$binWidth too small for interval ["), col(loCol), lit(", "), col(hiCol),
-        lit("]) — raise binWidth or maxBinsPerInterval")))).otherwise(hiBin)
+        lit("]) — raise binWidth or maxBins")))).otherwise(hiBin)
     val ib = intervals.withColumn("_bin", explode(sequence(loBin, guardedHi)))
     pb.join(ib, Seq("_bin"))
       .where(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))

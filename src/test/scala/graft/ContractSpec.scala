@@ -28,6 +28,12 @@ class ContractSpec extends SparkSpec {
       s"oracle coverage drifted: rows-only should be $rowsOnly, found $noOracle")
   }
 
+  test("Verify takes two or three args; any other count is a usage error, not a MatchError") {
+    assert(Verify.parseArgs(Array("sf", "out")).contains(("sf", "out", "")))
+    assert(Verify.parseArgs(Array("sf", "out", "q1,q2")).contains(("sf", "out", "q1,q2")))
+    for (n <- Seq(0, 1, 4)) assert(Verify.parseArgs(Array.fill(n)("x")).isEmpty)
+  }
+
   test("every oracle key names a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without a query: $orphans")

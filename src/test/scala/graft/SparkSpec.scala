@@ -3,23 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test run (sessions are expensive). */
+/** One shared local session for the whole test run (sessions are expensive),
+  * built like every served and measured session; native functions come from
+  * `Tables.register`, as they do there. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // Fixed at 4 so plan-shape assertions don't depend on the host's width;
+  // a private warehouse so bucketed-table specs never touch the checkout.
+  lazy val spark: SparkSession = GraftSession.create(Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString), cpus = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

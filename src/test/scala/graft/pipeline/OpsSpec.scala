@@ -152,13 +152,13 @@ class OpsSpec extends SparkSpec {
     // an interval spanning > maxBins bins fails loudly instead of exploding
     val wide = Seq((10L, 0.0, 1e9)).toDF("iid", "lo", "hi")
     val e = intercept[Exception] {
-      Ops.rangeJoin(points, wide, "v", "lo", "hi", binWidth = 0.001, maxBinsPerInterval = 100)
+      Ops.rangeJoin(points, wide, "v", "lo", "hi", binWidth = 0.001, maxBins = 100)
         .collect()
     }
     assert(e.getMessage.contains("rangeJoin"), e.getMessage)
     // at-the-cap spans still work
     assert(Ops.rangeJoin(points, intervals, "v", "lo", "hi",
-      binWidth = 0.1, maxBinsPerInterval = 1000).count() == 1)
+      binWidth = 0.1, maxBins = 1000).count() == 1)
   }
 
   test("partitioned sink enables partition pruning on read") {
