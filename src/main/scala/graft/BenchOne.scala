@@ -1,155 +1,58 @@
 package graft
 
-/** Ad-hoc single-query profiler: compares evaluation strategies.
-  * Usage: BenchOne <sfDir> <queryName> */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Single-query profiler and formulation A/B runner.
+  * Usage: BenchOne <sfDir> <mode>, where <mode> is one of
+  *  - an A/B key of [[abs]]: every formulation of that decision, 3 runs
+  *    each, timed with [[Bench.seconds]];
+  *  - `stream_profile:<entry>`: per-batch and per-job timings of a
+  *    streaming drain entry;
+  *  - a catalog entry name: toRdd / noop-write / collect timings plus the
+  *    executed plan.
+  * Scale questions (does t(10x)/t(1x) stay near-linear?) belong to
+  * [[BenchScale]], which gates them; this tool answers "which of these
+  * formulations is faster at this size". */
 object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, name) = args
-    val spark = GraftSession.create()
-    Tables.register(spark, sfDir)
-    if (name == "cosine_native_vs_hof") {
-      // all-pairs within a 500-row slice: 250k scoring ops per formulation
-      val nat = "SELECT SUM(cosine_similarity(a.embedding, b.embedding)) FROM " +
-        "(SELECT * FROM embeddings WHERE vec_id < 500) a JOIN (SELECT * FROM embeddings WHERE vec_id < 500) b"
-      val hof = "SELECT SUM(aggregate(zip_with(a.embedding, b.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (s, x) -> s + x) " +
-        "/ (SQRT(aggregate(a.embedding, CAST(0 AS DOUBLE), (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) * SQRT(aggregate(b.embedding, CAST(0 AS DOUBLE), (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) FROM " +
-        "(SELECT * FROM embeddings WHERE vec_id < 500) a JOIN (SELECT * FROM embeddings WHERE vec_id < 500) b"
-      for (i <- 1 to 3) {
-        for ((label, q) <- Seq("native" -> nat, "hof" -> hof)) {
-          val t0 = System.nanoTime()
-          spark.sql(q).collect()
-          println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "simhash_stages") {
-      // q50b stage split: signature computation vs banded candidate join —
-      // decides where a constant cut buys margin (VERDICT r13 #1).
-      for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        val h = pipeline.Dedup.simhash(spark, sfDir).localCheckpoint(true)
-        val n = h.count()
-        println(f"run$i signature+checkpoint: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n docs)")
-        t0 = System.nanoTime()
-        val pairs = pipeline.Dedup.simhashNearDupFrom(h, 16).count()
-        println(f"run$i banded join bits=16:  ${(System.nanoTime() - t0) / 1e9}%.2f s ($pairs pairs)")
-      }
-      spark.stop(); return
-    }
-    if (name == "minhash_scale") {
-      // 20x corpus (tokens salted per copy so replicas aren't cross-copy
-      // dups): does near-dup detection stay near-linear?
-      import org.apache.spark.sql.functions._
-      val docs = spark.table("documents")
-      val big = spark.range(0, 20).crossJoin(docs).select(
-        (col("doc_id") + col("id") * 1000000L).as("doc_id"),
-        concat_ws(" ", expr("transform(split(lower(text), ' '), w -> concat('c', id, '_', w))")).as("text"))
-      big.createOrReplaceTempView("documents") // shadow with the big corpus
-      println(s"docs: ${big.count()}")
-      for (i <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val pairs = pipeline.Dedup.minhashNearDup(spark, sfDir).count()
-        println(f"run$i minhash over 20x corpus: ${(System.nanoTime() - t0) / 1e9}%.2f s, $pairs pairs")
-      }
-      spark.stop(); return
-    }
-    if (name == "cms_scale") {
-      // 50x events with per-copy-salted keys (50x the key cardinality too):
-      // the native CMS keeps a FIXED 4x256 buffer per partition while the
-      // exact per-key count's shuffle grows with the key set. Measures both
-      // at 1x and 50x — the ratio gap is the communication-shape argument.
-      import org.apache.spark.sql.functions._
-      val ev = spark.table("events")
-      val big = spark.range(0, 50).crossJoin(ev)
-        .select(concat(lit("c"), col("id"), lit("_"), col("user_id")).as("key"))
-      big.createOrReplaceTempView("events_big")
-      spark.table("events")
-        .select(concat(lit("c0_"), col("user_id")).as("key"))
-        .createOrReplaceTempView("events_1x")
-      println(s"rows 50x: ${big.count()}")
-      for (i <- 1 to 2; (label, sql) <- Seq(
-          "cms 1x " -> "SELECT cms_agg(key, 4, 256) AS sk FROM events_1x",
-          "cms 50x" -> "SELECT cms_agg(key, 4, 256) AS sk FROM events_big",
-          "exact 1x " -> "SELECT key, COUNT(*) AS c FROM events_1x GROUP BY key",
-          "exact 50x" -> "SELECT key, COUNT(*) AS c FROM events_big GROUP BY key")) {
-        val t0 = System.nanoTime()
-        spark.sql(sql).queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "asof_native_vs_window") {
-      // Same as-of query (q205 shape) through the custom merge operator vs
-      // the union+window formulation; both pay one shuffle per side.
-      import org.apache.spark.sql.functions._
-      val left = spark.table("events").select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = spark.table("events").where(col("event_type") === "click")
-        .groupBy("user_id", "ts").agg(round(max(col("value")), 4).as("click_v"))
-      for (i <- 1 to 3) {
-        var t0 = System.nanoTime()
-        val n1 = pipeline.Ops.asofJoinNative(left, clicks, "user_id", "ts", Seq("click_v"))
-          .queryExecution.toRdd.count()
-        println(f"run$i native merge: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n1 rows)")
-        t0 = System.nanoTime()
-        val n2 = pipeline.Ops.asofJoin(left, clicks, "user_id", "ts", Seq("click_v"))
-          .queryExecution.toRdd.count()
-        println(f"run$i union+window: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n2 rows)")
-      }
-      spark.stop(); return
-    }
-    if (name == "incremental_scale") {
-      // 20x corpus (salted per copy, as minhash_scale): daily-ingest shape.
-      // Compares a FULL re-dedup of the corpus against the incremental path
-      // with the corpus band signatures pre-materialized (in production
-      // they're read from the signature store, not recomputed per batch) —
-      // only batch signatures + the band joins + candidate verify are paid.
-      import org.apache.spark.sql.functions._
-      val docs = spark.table("documents")
-      val big = spark.range(0, 20).crossJoin(docs).select(
-        (col("doc_id") + col("id") * 1000000L).as("doc_id"),
-        concat_ws(" ", expr("transform(split(lower(text), ' '), w -> concat('c', id, '_', w))")).as("text"))
-      big.createOrReplaceTempView("documents")
-      println(s"docs: ${big.count()}")
-      val sh = pipeline.Dedup.shinglesOf(spark, sfDir).persist()
-      val corpusBands = pipeline.Dedup.bandsOf(sh.where("doc_id % 10 != 0")).persist()
-      println(s"corpus bands materialized: ${corpusBands.count()} (store stand-in)")
-      for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        val full = pipeline.Dedup.minhashNearDup(spark, sfDir).count()
-        println(f"run$i full re-dedup: ${(System.nanoTime() - t0) / 1e9}%.2f s ($full pairs)")
-        t0 = System.nanoTime()
-        val inc = pipeline.Dedup.incrementalNearDupFrom(sh,
-          pipeline.Dedup.bandsOf(sh.where("doc_id % 10 = 0")), corpusBands, 0.5).count()
-        println(f"run$i incremental (prebuilt corpus sigs): ${(System.nanoTime() - t0) / 1e9}%.2f s ($inc rows)")
-      }
-      spark.stop(); return
-    }
-    if (name == "ann_scale") {
-      // 20x vectors (deterministically perturbed replicas): LSH-bucketed
-      // scoring vs brute force at 10k vectors.
-      import org.apache.spark.sql.functions._
-      val emb = spark.table("embeddings")
-      val big = spark.range(0, 20).crossJoin(emb)
-        .select((col("vec_id") + col("id") * 1000000L).as("vec_id"), col("embedding"))
-        .select(col("vec_id"),
-          expr("transform(embedding, (x, j) -> CAST(x + (((vec_id + j) % 13) - 6) * 0.01 AS FLOAT))").as("embedding"))
-      big.createOrReplaceTempView("embeddings")
-      println(s"vectors: ${big.count()}")
-      for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        val lsh = pipeline.Similarity.lshTopK(spark, sfDir).count()
-        println(f"run$i lsh topk: ${(System.nanoTime() - t0) / 1e9}%.2f s ($lsh rows)")
-        t0 = System.nanoTime()
-        val brute = spark.sql(Queries.byName("q48_cosine_topk").sparkSql(spark)).count()
-        println(f"run$i brute topk: ${(System.nanoTime() - t0) / 1e9}%.2f s ($brute rows)")
-      }
-      spark.stop(); return
-    }
-    if (name == "ngram_explode_vs_array") {
-      // q46 formulations: exploded gram equi-join + groupBy count vs
-      // per-doc distinct-gram arrays joined on adjacent id + array_intersect.
-      val exploded = """WITH ds AS (
+
+  private def sql(q: String): SparkSession => DataFrame = _.sql(q)
+
+  /** One synthetic `len`-char alphanumeric doc (seeded) as (id, t), read
+    * through an RDD so Catalyst cannot fold the gram build into a literal. */
+  private def syntheticDoc(spark: SparkSession, len: Int): DataFrame = {
+    import spark.implicits._
+    val doc = new scala.util.Random(42).alphanumeric.take(len).mkString
+    spark.sparkContext.parallelize(Seq((1L, doc)), 1).toDF("id", "t")
+  }
+
+  /** Formulation A/Bs, one key per decision a source comment or doc cites:
+    * key -> (label, formulation) rows, all computing the same answer. */
+  val abs: Map[String, Seq[(String, SparkSession => DataFrame)]] = Map(
+    // CosineSimilarity: native expression vs the same math as array HOFs,
+    // all pairs within a 500-row slice (250k scoring ops per formulation).
+    "cosine_native_vs_hof" -> {
+      val pairs = "(SELECT * FROM embeddings WHERE vec_id < 500) a JOIN (SELECT * FROM embeddings WHERE vec_id < 500) b"
+      def norm(v: String) = s"SQRT(aggregate($v, CAST(0 AS DOUBLE), (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+      Seq(
+        "native" -> sql(s"SELECT SUM(cosine_similarity(a.embedding, b.embedding)) FROM $pairs"),
+        "hof" -> sql("SELECT SUM(aggregate(zip_with(a.embedding, b.embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+          s"CAST(0 AS DOUBLE), (s, x) -> s + x) / (${norm("a.embedding")} * ${norm("b.embedding")})) FROM $pairs"))
+    },
+    // q72 shape: fused cosine (re-derives both norms per pair) vs hoisted
+    // norms (one dot per pair).
+    "dot_hoist_vs_fused" -> Seq(
+      "fused" -> sql("""SELECT COUNT(*) FROM embeddings a JOIN embeddings b
+        ON a.vec_id < b.vec_id
+       AND ROUND(cosine_similarity(a.embedding, b.embedding), 4) >= 0.4"""),
+      "hoist" -> sql("""WITH e AS (SELECT vec_id, embedding,
+          SQRT(dot_product(embedding, embedding)) AS nrm FROM embeddings)
+        SELECT COUNT(*) FROM e a JOIN e b
+          ON a.vec_id < b.vec_id
+         AND ROUND(dot_product(a.embedding, b.embedding) / (a.nrm * b.nrm), 4) >= 0.4""")),
+    // q46: exploded gram equi-join + groupBy count vs per-doc distinct-gram
+    // arrays joined on adjacent id + array_intersect.
+    "ngram_explode_vs_array" -> Seq(
+      "exploded" -> sql("""WITH ds AS (
           SELECT doc_id, explode(array_distinct(transform(sequence(1, length(text) - 2),
                                                           i -> substr(text, i, 3)))) AS g
           FROM documents),
@@ -160,8 +63,8 @@ object BenchOne {
           GROUP BY a.doc_id, b.doc_id)
         SELECT i.a_id, i.b_id, ROUND(CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i), 4) AS jaccard
         FROM inter i JOIN sizes sa ON sa.doc_id = i.a_id JOIN sizes sb ON sb.doc_id = i.b_id
-        ORDER BY i.a_id"""
-      val arrays = """WITH ds AS (
+        ORDER BY i.a_id"""),
+      "arrays" -> sql("""WITH ds AS (
           SELECT doc_id, array_distinct(transform(sequence(1, length(text) - 2),
                                                   i -> substr(text, i, 3))) AS gs
           FROM documents)
@@ -171,174 +74,13 @@ object BenchOne {
             size(array_intersect(a.gs, b.gs)) AS i, size(a.gs) AS na, size(b.gs) AS nb
           FROM ds a JOIN ds b ON b.doc_id = a.doc_id + 1)
         WHERE i > 0
-        ORDER BY a_id"""
-      // Third formulation: dictionary-encode the gram to a long with
-      // xxhash64 before the self-join — narrower shuffle key (8-byte long
-      // vs var-length UTF8String), same plan shape. Collisions would
-      // perturb intersect counts, but at 2^-64 per gram pair that is a
-      // measurement-only concern, not an oracle-safe substitution.
-      val hashed = """WITH ds AS (
-          SELECT doc_id, explode(transform(array_distinct(transform(sequence(1, length(text) - 2),
-                                                                    i -> substr(text, i, 3))),
-                                           g -> xxhash64(g))) AS g
-          FROM documents),
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM ds GROUP BY doc_id),
-        inter AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS i
-          FROM ds a JOIN ds b ON a.g = b.g AND b.doc_id = a.doc_id + 1
-          GROUP BY a.doc_id, b.doc_id)
-        SELECT i.a_id, i.b_id, ROUND(CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i), 4) AS jaccard
-        FROM inter i JOIN sizes sa ON sa.doc_id = i.a_id JOIN sizes sb ON sb.doc_id = i.b_id
-        ORDER BY i.a_id"""
-      for (i <- 1 to 3;
-           (label, q) <- Seq("exploded" -> exploded, "arrays" -> arrays, "hashed" -> hashed)) {
-        val t0 = System.nanoTime()
-        val n = spark.sql(q).collect().length
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
-      }
-      spark.stop(); return
-    }
-    if (name == "tpch_scale") {
-      // Relational scale stress: replicate lineitem/orders 10x with shifted
-      // keys (join fan-out preserved: each replica joins only its own copy)
-      // and compare the shuffle-heavy TPC-H Q1/Q5 shapes at 1x vs 10x.
-      // Near-linear growth = the plan survives a scale-up; superlinear
-      // growth would flag a shuffle or build side that stops fitting.
-      import org.apache.spark.sql.functions._
-      val q1 = Queries.byName("q21_tpch_q1").sparkSql(spark)
-      val q5 = Queries.byName("q93_tpch_q5").sparkSql(spark)
-      def run(label: String): Unit =
-        for (i <- 1 to 2; (n, q) <- Seq("q1" -> q1, "q5" -> q5)) {
-          val t0 = System.nanoTime()
-          spark.sql(q).queryExecution.toRdd.foreach(_ => ())
-          println(f"$label run$i $n: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-      run("1x")
-      val shift = 100000000L
-      val li = spark.table("lineitem")
-      val ord = spark.table("orders")
-      spark.range(0, 10).crossJoin(li)
-        .withColumn("l_orderkey", col("l_orderkey") + col("id") * shift)
-        .drop("id").createOrReplaceTempView("lineitem")
-      spark.range(0, 10).crossJoin(ord)
-        .withColumn("o_orderkey", col("o_orderkey") + col("id") * shift)
-        .drop("id").createOrReplaceTempView("orders")
-      println(s"lineitem rows: ${spark.table("lineitem").count()}")
-      run("10x")
-      spark.stop(); return
-    }
-    if (name == "textdup_scale") {
-      // 10x corpus (tokens salted per copy, ids shifted — replicas are not
-      // cross-copy dups): q46's exploded-trigram equi-join and the banded
-      // SimHash near-dup. Both join on composite equi-keys ((gram, adjacent
-      // id) / (band, bandhash)), so group sizes must stay bounded and the
-      // runtime near-linear as the corpus grows.
-      import org.apache.spark.sql.functions._
-      val docs = spark.table("documents")
-      def run(label: String): Unit = for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        // q46 lives in pipeline/Ext.scala; route through the catalog so the
-        // lookup resolves and the __NP__ repartition placeholder substitutes
-        val n46 = SparkEntry.queries("q46_ngram_jaccard")(spark, sfDir).count()
-        println(f"$label run$i q46 trigram jaccard: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n46 rows)")
-        t0 = System.nanoTime()
-        val nsh = pipeline.Dedup.simhashNearDup(spark, sfDir).count()
-        println(f"$label run$i simhash neardup:     ${(System.nanoTime() - t0) / 1e9}%.2f s ($nsh pairs)")
-      }
-      println(s"1x docs: ${docs.count()}")
-      run("1x")
-      val big = spark.range(0, 10).crossJoin(docs).select(
-        (col("doc_id") + col("id") * 1000000L).as("doc_id"),
-        concat_ws(" ", expr("transform(split(lower(text), ' '), w -> concat('c', id, '_', w))")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-      big.createOrReplaceTempView("documents")
-      println(s"10x docs: ${spark.table("documents").count()}")
-      run("10x")
-      spark.stop(); return
-    }
-    if (name == "neardup_scale") {
-      // 10x embeddings (perturbed replicas): the audit-only exact all-pairs
-      // near-dup (q72 shape) vs the LSH-prefiltered production path (q72b).
-      // All-pairs grows quadratically; the prefilter stays near-linear —
-      // the gap at 10x is the point.
-      import org.apache.spark.sql.functions._
-      val emb = spark.table("embeddings")
-      def run(label: String): Unit = for (i <- 1 to 2) {
-        var t0 = System.nanoTime()
-        val np = pipeline.Similarity.prefilteredNearDup(spark, sfDir).count()
-        println(f"$label run$i prefiltered+verify: ${(System.nanoTime() - t0) / 1e9}%.2f s ($np pairs)")
-        t0 = System.nanoTime()
-        val ne = spark.sql(Queries.byName("q72_embedding_neardup").sparkSql(spark)).count()
-        println(f"$label run$i exact all-pairs:    ${(System.nanoTime() - t0) / 1e9}%.2f s ($ne pairs)")
-      }
-      println(s"1x vectors: ${emb.count()}")
-      run("1x")
-      // replica ids shifted by 10M (clear of q72b's +1M planted-twin ids);
-      // per-replica perturbations make same-base replicas legitimate
-      // near-dups, so the 10x corpus also has 10x+ true matches
-      val big = spark.range(0, 10).crossJoin(emb)
-        .select((col("vec_id") + col("id") * 10000000L).as("vec_id"), col("embedding"))
-        .select(col("vec_id"),
-          expr("transform(embedding, (x, j) -> CAST(x + (((vec_id + j) % 13) - 6) * 0.01 AS FLOAT))").as("embedding"))
-      big.createOrReplaceTempView("embeddings")
-      println(s"10x vectors: ${spark.table("embeddings").count()}")
-      run("10x")
-      spark.stop(); return
-    }
-    if (name == "dot_hoist_vs_fused") {
-      // all-pairs cosine scoring: fused expression (re-derives both norms
-      // per pair) vs hoisted norms (one dot per pair) — the q72 shape.
-      val fused = """SELECT COUNT(*) FROM embeddings a JOIN embeddings b
-        ON a.vec_id < b.vec_id
-       AND ROUND(cosine_similarity(a.embedding, b.embedding), 4) >= 0.4"""
-      val hoist = """WITH e AS (SELECT vec_id, embedding,
-          SQRT(dot_product(embedding, embedding)) AS nrm FROM embeddings)
-        SELECT COUNT(*) FROM e a JOIN e b
-          ON a.vec_id < b.vec_id
-         AND ROUND(dot_product(a.embedding, b.embedding) / (a.nrm * b.nrm), 4) >= 0.4"""
-      for (i <- 1 to 3; (label, q) <- Seq("fused" -> fused, "hoist" -> hoist)) {
-        val t0 = System.nanoTime()
-        val n = spark.sql(q).collect().head.getLong(0)
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n pairs)")
-      }
-      spark.stop(); return
-    }
-    if (name == "prefixsum_scale") {
-      // q292's claim measured: the two-level prefix sum (bucket partials +
-      // 256-row window + partitioned running sums) vs the naive global-
-      // window cumsum (single-partition stage) on a 20x corpus.
-      import org.apache.spark.sql.functions._
-      val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "20").toInt
-      val docs = spark.table("documents")
-      val big = spark.range(0, copies).crossJoin(docs).select(
-        (col("doc_id") + col("id") * 1000000L).as("doc_id"), col("text"))
-      big.createOrReplaceTempView("documents") // shadow with the big corpus
-      println(s"docs: ${big.count()}")
-      val twoLevel = Queries.byName("q292_shard_packing").sparkSql(spark)
-      val naive =
-        """WITH tok AS (SELECT doc_id, size(split(text, ' ')) AS n_tok,
-          |             md5(CAST(doc_id AS STRING)) AS h FROM documents),
-          |c AS (SELECT doc_id, n_tok,
-          |        COALESCE(SUM(n_tok) OVER (ORDER BY h, doc_id
-          |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-          |      FROM tok)
-          |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-          |  CAST(FLOOR(cum_before / 2048.0) AS BIGINT) AS shard
-          |FROM c ORDER BY doc_id""".stripMargin
-      for (i <- 1 to 2; (label, q) <- Seq("two-level" -> twoLevel, "global-window" -> naive)) {
-        val t0 = System.nanoTime()
-        spark.sql(q).queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "kmv_window_vs_agg") {
-      // The q318/q318b claim, isolated: per-half bottom-256 of the distinct
-      // 3-gram md5s via (a) two ranked-window passes over the distinct set
-      // vs (b) the native kmv_agg (map-side partial bottom-k on RAW grams —
-      // no pre-distinct, the sketch dedups; the shuffle carries at most
-      // partitions x k values per group).
-      val window =
+        ORDER BY a_id""")),
+    // q318/q318b: per-half bottom-256 of the distinct 3-gram md5s via two
+    // ranked-window passes over the distinct set vs the native kmv_agg
+    // (map-side partial bottom-k on RAW grams; the shuffle carries at most
+    // partitions x k values per group).
+    "kmv_window_vs_agg" -> Seq(
+      "window" -> sql(
         """WITH t AS (SELECT doc_id % 2 AS half, split(text, ' ') AS ws FROM documents),
           |g AS (SELECT DISTINCT half, concat_ws(' ', slice(ws, i, 3)) AS gram
           |      FROM t LATERAL VIEW explode(sequence(1, size(ws) - 2)) x AS i
@@ -347,274 +89,129 @@ object BenchOne {
           |bk AS (SELECT half, h FROM
           |       (SELECT half, h, ROW_NUMBER() OVER (PARTITION BY half ORDER BY h) AS rk
           |        FROM h) w WHERE rk <= 256)
-          |SELECT half, COUNT(*) AS n, MAX(h) AS kth FROM bk GROUP BY half""".stripMargin
-      val native =
+          |SELECT half, COUNT(*) AS n, MAX(h) AS kth FROM bk GROUP BY half""".stripMargin),
+      "native-agg" -> sql(
         """WITH t AS (SELECT doc_id % 2 AS half, split(text, ' ') AS ws FROM documents),
           |g AS (SELECT half, concat_ws(' ', slice(ws, i, 3)) AS gram
           |      FROM t LATERAL VIEW explode(sequence(1, size(ws) - 2)) x AS i
           |      WHERE size(ws) >= 3),
           |bk AS (SELECT half, kmv_agg(md5(gram), 256) AS sk FROM g GROUP BY half)
-          |SELECT half, size(sk) AS n, element_at(sk, -1) AS kth FROM bk""".stripMargin
-      for (i <- 1 to 3; (label, q) <- Seq("window" -> window, "native-agg" -> native)) {
-        val t0 = System.nanoTime()
-        spark.sql(q).queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "funnel_stage_profile") {
-      // Times q340's funnel stage by stage (cardinality + wall seconds per
-      // CTE prefix) to attribute cost: candidate generation vs exact
-      // intersection vs the cheap tail stages.
-      val prefix =
-        """WITH d0 AS (SELECT doc_id, source, md5(text) AS h, lower(text) AS lt,
-          |             size(split(text, ' ')) AS wc, n_chars, text FROM documents),
-          |ex AS (SELECT d0.* FROM d0
-          |       JOIN (SELECT h, MIN(doc_id) AS kid FROM d0 GROUP BY h) g
-          |         ON d0.h = g.h AND d0.doc_id = g.kid),
-          |sh AS (SELECT DISTINCT doc_id, concat_ws(' ', slice(ws, i, 3)) AS gram FROM
-          |       (SELECT doc_id, split(lt, ' ') AS ws FROM ex WHERE size(split(lt, ' ')) >= 3) t
-          |       LATERAL VIEW explode(sequence(1, size(ws) - 2)) x AS i),
-          |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-          |gc AS (SELECT gram FROM sh GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 32),
-          |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |         FROM sh a JOIN gc USING (gram) JOIN sh b USING (gram)
-          |         WHERE a.doc_id < b.doc_id),
-          |inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS i
-          |          FROM cand c JOIN sh sa ON sa.doc_id = c.a_id
-          |          JOIN sh sb ON sb.doc_id = c.b_id AND sa.gram = sb.gram
-          |          GROUP BY c.a_id, c.b_id),
-          |drops AS (SELECT DISTINCT i.b_id FROM inter i
-          |          JOIN sz na ON i.a_id = na.doc_id JOIN sz nb ON i.b_id = nb.doc_id
-          |          WHERE ROUND(CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i), 4) >= 0.5)
-          |""".stripMargin
-      for (stage <- Seq("sh", "gc", "cand", "inter", "drops"); i <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val n = spark.sql(prefix + s"SELECT COUNT(*) AS n FROM $stage").collect()(0).getLong(0)
-        println(f"run$i $stage%-6s rows=$n%9d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      }
-      // Pruned variant: the drops predicate is ROUND(J,4) >= 0.5 (true
-      // J >= 0.49995), so the sound integer bound carries the half-unit
-      // slack — i*29999 >= 9999*(na+nb), q340's EXACT production constants
-      // (ADVICE r9: the earlier 3*i >= na+nb corresponds to J >= 0.5 and
-      // would prune a pair with J in [0.49995, 0.5) that q340 keeps,
-      // skewing this diagnostic's per-stage counts) — and the true
-      // intersection is bounded by shared-capped-grams + min(hot-gram
-      // counts) (singleton grams can't be shared); prune candidate pairs
-      // with that bound BEFORE the exact per-pair re-join.
-      val pruned =
-        """WITH d0 AS (SELECT doc_id, source, md5(text) AS h, lower(text) AS lt,
-          |             size(split(text, ' ')) AS wc, n_chars, text FROM documents),
-          |ex AS (SELECT d0.* FROM d0
-          |       JOIN (SELECT h, MIN(doc_id) AS kid FROM d0 GROUP BY h) g
-          |         ON d0.h = g.h AND d0.doc_id = g.kid),
-          |sh AS (SELECT DISTINCT doc_id, concat_ws(' ', slice(ws, i, 3)) AS gram FROM
-          |       (SELECT doc_id, split(lt, ' ') AS ws FROM ex WHERE size(split(lt, ' ')) >= 3) t
-          |       LATERAL VIEW explode(sequence(1, size(ws) - 2)) x AS i),
-          |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-          |gc AS (SELECT gram FROM sh GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 32),
-          |cp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS ic
-          |       FROM sh a JOIN gc USING (gram) JOIN sh b USING (gram)
-          |       WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-          |hotg AS (SELECT gram FROM sh GROUP BY gram HAVING COUNT(*) > 32),
-          |hz AS (SELECT doc_id, COUNT(*) AS hn FROM sh JOIN hotg USING (gram) GROUP BY doc_id),
-          |cand AS (SELECT cp.a_id, cp.b_id FROM cp
-          |         JOIN sz na ON cp.a_id = na.doc_id JOIN sz nb ON cp.b_id = nb.doc_id
-          |         LEFT JOIN hz ha ON cp.a_id = ha.doc_id
-          |         LEFT JOIN hz hb ON cp.b_id = hb.doc_id
-          |         WHERE (cp.ic + LEAST(COALESCE(ha.hn, 0), COALESCE(hb.hn, 0))) * 29999
-          |               >= 9999 * (na.n + nb.n)),
-          |inter AS (SELECT c.a_id, c.b_id, COUNT(*) AS i
-          |          FROM cand c JOIN sh sa ON sa.doc_id = c.a_id
-          |          JOIN sh sb ON sb.doc_id = c.b_id AND sa.gram = sb.gram
-          |          GROUP BY c.a_id, c.b_id),
-          |drops AS (SELECT DISTINCT i.b_id FROM inter i
-          |          JOIN sz na ON i.a_id = na.doc_id JOIN sz nb ON i.b_id = nb.doc_id
-          |          WHERE ROUND(CAST(i.i AS DOUBLE) / (na.n + nb.n - i.i), 4) >= 0.5)
-          |""".stripMargin
-      for (stage <- Seq("cand", "inter", "drops"); i <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val n = spark.sql(pruned + s"SELECT COUNT(*) AS n FROM $stage").collect()(0).getLong(0)
-        println(f"run$i pruned-$stage%-6s rows=$n%9d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "zorder_profile") {
-      // q260 stage split: quantile sketch vs bucket+shuffle+write vs readback.
+          |SELECT half, size(sk) AS n, element_at(sk, -1) AS kth FROM bk""".stripMargin)),
+    // q205 shape: the custom merge operator (AsOfJoinExec) vs the
+    // union+window formulation; both pay one shuffle per side.
+    "asof_native_vs_window" -> {
       import org.apache.spark.sql.functions._
-      val df = spark.table("events").select("event_id", "user_id", "event_type", "value")
-      for (i <- 1 to 2) {
-        val out = java.nio.file.Files.createTempDirectory("graft_zorder_prof").toString
-        var t0 = System.nanoTime()
-        val probs = (1 until 64).map(_.toDouble / 64).toArray // matches zorderWriteN
-        val qs = df.stat.approxQuantile(Array("user_id", "value"), probs, 0.001)
-        println(f"run$i approxQuantile: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        t0 = System.nanoTime()
-        pipeline.Ops.zorderWrite(df, out, "user_id", "value", nFiles = 16)
-        println(f"run$i full zorderWrite: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        // finer: z-eval only, then repartition+sort to noop, then write-only
-        t0 = System.nanoTime()
-        val zdf = pipeline.Ops.zorderFrame(df, Seq("user_id", "value"), qs)
-        zdf.queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i z-eval pass: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        t0 = System.nanoTime()
-        zdf.repartitionByRange(16, col("__z")).sortWithinPartitions("__z").drop("__z")
-          .write.format("noop").mode("overwrite").save()
-        println(f"run$i range+sort->noop: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        t0 = System.nanoTime()
-        zdf.repartitionByRange(16, col("__z")).sortWithinPartitions("__z").drop("__z")
-          .write.mode("overwrite").parquet(out + "_w")
-        println(f"run$i range+sort->parquet: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        t0 = System.nanoTime()
-        spark.read.parquet(out)
-          .where(col("user_id").between(10, 40) && col("value").between(50, 150))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-          .orderBy("event_type")
-          .queryExecution.toRdd.foreach(_ => ())
-        println(f"run$i readback+agg: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      def sides(spark: SparkSession): (DataFrame, DataFrame) = {
+        val ev = spark.table("events")
+        (ev.select(col("event_id"), col("user_id"), col("ts")),
+         ev.where(col("event_type") === "click")
+           .groupBy("user_id", "ts").agg(round(max(col("value")), 4).as("click_v")))
       }
-      spark.stop(); return
+      Seq(
+        "native merge" -> { (s: SparkSession) =>
+          val (l, r) = sides(s); pipeline.Ops.asofJoinNative(l, r, "user_id", "ts", Seq("click_v")) },
+        "union+window" -> { (s: SparkSession) =>
+          val (l, r) = sides(s); pipeline.Ops.asofJoin(l, r, "user_id", "ts", Seq("click_v")) })
+    },
+    // Ops.charGramArraySql: positional substr char-grams (O(L²) per doc)
+    // vs the length-gated build, distinct bigrams of one doc per length.
+    // Quadratic growth in the substr rows and ~linear in the gated rows is
+    // the point.
+    "chargram_cliff" -> (for {
+      len <- Seq(1 << 10, 1 << 13, 1 << 15, 1 << 17)
+      (label, grams) <- Seq(
+        "substr" -> "transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))",
+        "gated" -> pipeline.Ops.charGramArraySql("t", 2))
+    } yield f"len=$len%6d $label" -> { (s: SparkSession) =>
+      syntheticDoc(s, len).selectExpr("t", s"${pipeline.Ops.charSplitGuardSql("t")} AS __ch")
+        .selectExpr(s"explode($grams) AS bg").distinct()
+    })
+  )
+
+  private val streamPrefix = "stream_profile:"
+
+  val usage: String =
+    s"usage: graft.BenchOne <sfDir> <mode>; mode = one of ${abs.keys.toSeq.sorted.mkString(", ")}, " +
+      s"$streamPrefix<entry>, or a catalog entry name"
+
+  /** (sfDir, mode) when `args` is exactly `<sfDir> <mode>` and the mode is
+    * an A/B key, `stream_profile:<entry>` or an entry of `knownEntries`;
+    * None otherwise. */
+  def parseArgs(args: Array[String], knownEntries: Set[String]): Option[(String, String)] = args match {
+    case Array(sfDir, mode) if abs.contains(mode) || knownEntries(mode.stripPrefix(streamPrefix)) =>
+      Some((sfDir, mode))
+    case _ => None
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, name) = parseArgs(args, SparkEntry.queries.keySet).getOrElse {
+      System.err.println(usage)
+      sys.exit(2)
     }
-    if (name == "chargram_cliff") {
-      // The O(L²) cliff of positional substr char-grams vs the length-gated
-      // build (Ops.charGramArraySql): synthetic docs of growing length,
-      // count distinct bigrams per doc. Quadratic growth in the substr
-      // column and ~linear growth in the gated column is the point.
-      import spark.implicits._
-      for (len <- Seq(1 << 10, 1 << 13, 1 << 15, 1 << 17)) {
-        val doc = scala.util.Random.javaRandomToRandom(new java.util.Random(42))
-          .alphanumeric.take(len).mkString
-        val df = Seq((1L, doc)).toDF("id", "t").localCheckpoint(true)
-        for ((label, expr) <- Seq(
-            "substr" -> s"transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))",
-            "gated " -> pipeline.Ops.charGramArraySql("t", 2))) {
-          val base = df.selectExpr("id", "t",
-            s"${pipeline.Ops.charSplitGuardSql("t")} AS __ch")
-          val t0 = System.nanoTime()
-          val n = base.selectExpr("id", s"explode($expr) AS bg")
-            .select("bg").distinct().count()
-          println(f"len=$len%7d $label: ${(System.nanoTime() - t0) / 1e9}%7.3f s ($n distinct)")
+    val spark = GraftSession.create()
+    Tables.register(spark, sfDir)
+    var failed = false
+    abs.get(name) match {
+      case Some(rows) =>
+        for (i <- 1 to 3; (label, f) <- rows) {
+          val sec = Bench.seconds(f(spark), e => {
+            failed = true
+            System.err.println(s"run$i $label FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          })
+          if (sec >= 0) println(f"run$i $label: $sec%.3f s")
+        }
+      case None if name.startsWith(streamPrefix) => streamProfile(spark, sfDir, name.stripPrefix(streamPrefix))
+      case None => entryProfile(spark, sfDir, name)
+    }
+    spark.stop()
+    if (failed) sys.exit(1)
+  }
+
+  /** Per-batch + per-job attribution for a streaming drain entry: where
+    * does the wall-clock go — micro-batch execution (addBatch), offset/
+    * commit WAL writes, query planning, or gaps between jobs (driver-side
+    * setup, writeHalf batch jobs, cut computation)? */
+  private def streamProfile(spark: SparkSession, sfDir: String, qname: String): Unit = {
+    val t00 = System.nanoTime()
+    def rel: Double = (System.nanoTime() - t00) / 1e9
+    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
+        println(f"[sq] $rel%7.3f START   ${e.id}")
+      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val dm = p.durationMs
+        println(f"[sq] $rel%7.3f batch=${p.batchId}%2d rows=${p.numInputRows}%7d " +
+          f"trigger=${dm.getOrDefault("triggerExecution", -1L)}%5d addBatch=${dm.getOrDefault("addBatch", -1L)}%5d " +
+          f"getBatch=${dm.getOrDefault("getBatch", -1L)}%4d latestOffset=${dm.getOrDefault("latestOffset", -1L)}%4d " +
+          f"walCommit=${dm.getOrDefault("walCommit", -1L)}%4d commitOffsets=${dm.getOrDefault("commitOffsets", -1L)}%4d " +
+          f"planning=${dm.getOrDefault("queryPlanning", -1L)}%4d")
+        p.stateOperators.foreach { so =>
+          println(f"[sq]         state op=${so.operatorName} commitMs=${so.allUpdatesTimeMs + so.commitTimeMs}%d " +
+            f"rowsTotal=${so.numRowsTotal} memUsed=${so.memoryUsedBytes}")
         }
       }
-      spark.stop(); return
-    }
-    if (name == "hof_cost") {
-      // Round-14 §4 profiling: higher-order functions (transform/aggregate
-      // with lambdas) are CodegenFallback — every per-element lambda step is
-      // an interpreted expression-tree eval. Isolate that cost against the
-      // same work expressed through codegen'd operators.
-      val p = 9007199254740881L // Dedup.HashPrime (private[pipeline])
-      val cases = Seq(
-        "scan+len       " -> "SELECT SUM(LENGTH(text)) FROM documents",
-        "tok explode    " -> ("SELECT COUNT(tok), SUM(length(tok)) FROM (SELECT doc_id, " +
-          "explode(array_distinct(split(lower(text), ' '))) AS tok FROM documents) WHERE tok <> ''"),
-        "tok fold HOF   " -> (s"SELECT SUM(h % 1000000) FROM (SELECT aggregate(split(tok, ''), 0L, " +
-          s"(acc, c) -> (acc * 131 + ascii(c)) % $p) AS h FROM (SELECT " +
-          "explode(array_distinct(split(lower(text), ' '))) AS tok FROM documents) WHERE tok <> '')"),
-        "bigram HOF     " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)"),
-        "bigram posexpl " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, substr(t, i, 2) AS bg FROM (SELECT doc_id, lower(text) AS t FROM documents " +
-          "WHERE length(text) >= 2) LATERAL VIEW explode(sequence(1, length(t) - 1)) x AS i) GROUP BY doc_id, bg)"),
-        "3gram HOF      " -> ("SELECT COUNT(*) FROM (SELECT doc_id, " +
-          "explode(array_distinct(transform(sequence(1, size(w) - 2), i -> concat_ws(' ', w[i-1], w[i], w[i+1])))) AS g " +
-          "FROM (SELECT doc_id, split(lower(text), ' ') AS w FROM documents) WHERE size(w) >= 3)"),
-        "3gram posexpl  " -> ("SELECT COUNT(*) FROM (SELECT DISTINCT doc_id, concat_ws(' ', w[i-1], w[i], w[i+1]) AS g " +
-          "FROM (SELECT doc_id, split(lower(text), ' ') AS w FROM documents " +
-          "WHERE size(split(lower(text), ' ')) >= 3) d " +
-          "LATERAL VIEW explode(sequence(1, size(w) - 2)) x AS i)"),
-        // Single-row-group scans make everything below the first exchange a
-        // 1-task straggler; REPARTITION(N, key) fans the per-row work out.
-        // N must be explicit: AQE coalesces a no-N repartition of a ~1.5 MB
-        // input right back to one partition.
-        "bigram HOF rep " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT /*+ REPARTITION(32, doc_id) */ doc_id, explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)"),
-        "bigram norep   " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT /*+ REPARTITION(doc_id) */ doc_id, explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)"),
-        "tok fold rep   " -> (s"SELECT SUM(h % 1000000) FROM (SELECT aggregate(split(tok, ''), 0L, " +
-          s"(acc, c) -> (acc * 131 + ascii(c)) % $p) AS h FROM (SELECT /*+ REPARTITION(32, doc_id) */ doc_id, " +
-          "explode(array_distinct(split(lower(text), ' '))) AS tok FROM documents) WHERE tok <> '')"),
-        "bg expl only   " -> ("SELECT COUNT(bg) FROM (SELECT doc_id, " +
-          "explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2))"),
-        "bg gb nodoc    " -> ("SELECT COUNT(*) FROM (SELECT bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2)) GROUP BY bg)"),
-        "positions only " -> ("SELECT SUM(i) FROM (SELECT doc_id, lower(text) AS t FROM documents " +
-          "WHERE length(text) >= 2) d LATERAL VIEW explode(sequence(1, length(t) - 1)) x AS i"),
-        "bigram int key " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, ascii(substr(t, i, 1)) * 256 + ascii(substr(t, i + 1, 1)) AS bg " +
-          "FROM (SELECT doc_id, lower(text) AS t FROM documents WHERE length(text) >= 2) d " +
-          "LATERAL VIEW explode(sequence(1, length(t) - 1)) x AS i) GROUP BY doc_id, bg)"),
-        // O(L) bigrams: split the text into a char array ONCE, index O(1) —
-        // substr(t,i,2) scans from the string start (O(i) per call, O(L^2)
-        // per doc). Inner-block repartition distributes the explode itself.
-        "bigram splitO(L)" -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, explode(transform(sequence(1, size(cs) - 1), i -> concat(cs[i-1], cs[i]))) AS bg " +
-          "FROM (SELECT doc_id, split(lower(text), '') AS cs FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)"),
-        "bigram split+rep" -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, explode(transform(sequence(1, size(cs) - 1), i -> concat(cs[i-1], cs[i]))) AS bg " +
-          "FROM (SELECT /*+ REPARTITION(32, doc_id) */ doc_id, split(lower(text), '') AS cs " +
-          "FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)"),
-        "bigram sub+rep " -> ("SELECT COUNT(*), SUM(k) FROM (SELECT doc_id, bg, COUNT(*) AS k FROM (" +
-          "SELECT doc_id, explode(transform(sequence(1, length(t) - 1), i -> substr(t, i, 2))) AS bg " +
-          "FROM (SELECT /*+ REPARTITION(32, doc_id) */ doc_id, lower(text) AS t " +
-          "FROM documents WHERE length(text) >= 2)) GROUP BY doc_id, bg)")
-      )
-      for (i <- 1 to 3; (label, q) <- cases) {
-        val t0 = System.nanoTime()
-        val r = spark.sql(q).collect()
-        println(f"run$i $label: ${(System.nanoTime() - t0) / 1e9}%6.3f s  ${r.head}")
+      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+        println(f"[sq] $rel%7.3f END     ${e.id}")
+    })
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(e.jobId, System.nanoTime())
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        val dur = Option(starts.remove(e.jobId)).map(s => (System.nanoTime() - s) / 1e9).getOrElse(-1.0)
+        println(f"[job] $rel%7.3f job=${e.jobId}%3d dur=$dur%6.3f")
       }
-      spark.stop(); return
+    })
+    for (i <- 1 to 2) {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(qname)(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+      println(f"[sq] run$i total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
-    if (name.startsWith("stream_profile:")) {
-      // Per-batch + per-job attribution for a streaming drain entry: where
-      // does the wall-clock go — micro-batch execution (addBatch), offset/
-      // commit WAL writes, query planning, or gaps between jobs (driver-side
-      // setup, writeHalf batch jobs, cut computation)?
-      val qname = name.stripPrefix("stream_profile:")
-      val t00 = System.nanoTime()
-      def rel: Double = (System.nanoTime() - t00) / 1e9
-      spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-          println(f"[sq] $rel%7.3f START   ${e.id}")
-        override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          val dm = p.durationMs
-          println(f"[sq] $rel%7.3f batch=${p.batchId}%2d rows=${p.numInputRows}%7d " +
-            f"trigger=${dm.getOrDefault("triggerExecution", -1L)}%5d addBatch=${dm.getOrDefault("addBatch", -1L)}%5d " +
-            f"getBatch=${dm.getOrDefault("getBatch", -1L)}%4d latestOffset=${dm.getOrDefault("latestOffset", -1L)}%4d " +
-            f"walCommit=${dm.getOrDefault("walCommit", -1L)}%4d commitOffsets=${dm.getOrDefault("commitOffsets", -1L)}%4d " +
-            f"planning=${dm.getOrDefault("queryPlanning", -1L)}%4d")
-          p.stateOperators.foreach { so =>
-            println(f"[sq]         state op=${so.operatorName} commitMs=${so.allUpdatesTimeMs + so.commitTimeMs}%d " +
-              f"rowsTotal=${so.numRowsTotal} memUsed=${so.memoryUsedBytes}")
-          }
-        }
-        override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          println(f"[sq] $rel%7.3f END     ${e.id}")
-      })
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(e.jobId, System.nanoTime())
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val dur = Option(starts.remove(e.jobId)).map(s => (System.nanoTime() - s) / 1e9).getOrElse(-1.0)
-          println(f"[job] $rel%7.3f job=${e.jobId}%3d dur=$dur%6.3f")
-        }
-      })
-      for (i <- 1 to 2) {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(qname)(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-        println(f"[sq] run$i total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop(); return
-    }
+  }
+
+  /** One catalog entry: two rounds of toRdd / noop-write / collect timings,
+    * then the executed plan. */
+  private def entryProfile(spark: SparkSession, sfDir: String, name: String): Unit = {
     val fn = SparkEntry.queries(name)
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
@@ -629,6 +226,5 @@ object BenchOne {
     val finalDf = fn(spark, sfDir)
     finalDf.queryExecution.toRdd.foreach(_ => ())
     println(finalDf.queryExecution.executedPlan.toString.take(3000))
-    spark.stop()
   }
 }

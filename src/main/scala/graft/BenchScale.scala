@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (equi-joins, posting caps, bounded rounds) into numbers — a scale-killer
   * that slipped past the plan audits shows up here as a super-linear fit.
   *
-  * Fixture methodology (the BenchOne salted-copy convention, hardened):
+  * Fixture methodology (salted copies, each materialized to its own dir):
   * every copy is a DISJOINT similarity/join universe, so true-match and
   * candidate volume grow k-fold, never k^2-fold —
   *  - documents: per-copy token salt `c<copy>_<word>` (replicas share no

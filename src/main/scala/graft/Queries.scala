@@ -7225,38 +7225,26 @@ object Queries {
     // round twice — top-1 pick and min-dist update — so the tree doubles
     // per round); the Ext implementation materializes each round once with
     // an eager localCheckpoint, identical integer arithmetic, same DuckDB
-    // oracle (fpsSql(duck = true) below).
+    // oracle (fpsSql below).
   )
 
-  /** Unrolled farthest-point-sampling rounds (q395) in either dialect —
+  /** Unrolled farthest-point-sampling rounds (q395) in the DuckDB dialect —
     * seed = vec_id 0, `rounds` further selections, incremental min-dist.
-    * The duck side remains q395's oracle (Ext.oracles); the spark side is
-    * retained for the BenchOne A/B harness. */
-  private[graft] def fpsSql(duck: Boolean, rounds: Int = 7): String = {
+    * q395's oracle (Ext.oracles). */
+  private[graft] def fpsSql(rounds: Int = 7): String = {
     def d2(a: String, b: String): String =
-      if (duck)
-        s"CAST(list_sum(list_transform(range(1, len($a) + 1), j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)"
-      else
-        s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    val quant =
-      if (duck) "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
-      else "transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
+      s"CAST(list_sum(list_transform(range(1, len($a) + 1), j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)"
+    val quant = "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
     val ctes = Seq(
       s"e AS (SELECT vec_id, $quant AS q FROM embeddings)",
       "s0 AS (SELECT q AS sq FROM e WHERE vec_id = 0)",
-      // The 1-row selected-vector side must BROADCAST (hinted in the Spark
-      // dialect): post-join CTEs carry no row-count stats, so without the
-      // hint Spark falls back to CartesianProductExec — same result, but a
-      // full-shuffle all-pairs operator instead of a map-side pass.
-      s"m0 AS (SELECT${if (duck) "" else " /*+ BROADCAST(s0) */"} e.vec_id, e.q, " +
-        s"${d2("e.q", "s0.sq")} AS md FROM e CROSS JOIN s0)") ++
+      s"m0 AS (SELECT e.vec_id, e.q, ${d2("e.q", "s0.sq")} AS md FROM e CROSS JOIN s0)") ++
       (1 to rounds).flatMap { r =>
         Seq(
           s"p$r AS (SELECT vec_id, md FROM m${r - 1} ORDER BY md DESC, vec_id LIMIT 1)",
           s"s$r AS (SELECT e.q AS sq FROM e JOIN p$r ON e.vec_id = p$r.vec_id)") ++
           (if (r < rounds)
-             Seq(s"m$r AS (SELECT${if (duck) "" else " /*+ BROADCAST(s) */"} m.vec_id, m.q, " +
-               s"LEAST(m.md, ${d2("m.q", "s.sq")}) AS md " +
+             Seq(s"m$r AS (SELECT m.vec_id, m.q, LEAST(m.md, ${d2("m.q", "s.sq")}) AS md " +
                s"FROM m${r - 1} m CROSS JOIN s$r s)")
            else Nil)
       }
@@ -7268,8 +7256,6 @@ object Queries {
       s"\nSELECT CAST(sel_rank AS INT) AS sel_rank, vec_id, gain_d2 FROM ($union) u ORDER BY sel_rank"
   }
 
-  /** Spark-dialect CTE chain of the q284/q288 BPE unroll (wd word counts,
-    * w0 char symbols, 3 x (pair counts pK, argmax bK, merged wK)). */
   /** One unrolled Hilbert-curve round at scale `s` (the standard xy→d bit
     * transform: accumulate the quadrant, then flip+swap when ry = 0) —
     * dialect-neutral SQL shared by the q339 entry and its oracle. */
@@ -7315,6 +7301,8 @@ object Queries {
        |FROM idx CROSS JOIN hs CROSS JOIN ms
        |GROUP BY hs.st, ms.st""".stripMargin
 
+  /** Spark-dialect CTE chain of the q284/q288 BPE unroll (wd word counts,
+    * w0 char symbols, 3 x (pair counts pK, argmax bK, merged wK)). */
   private def bpeSparkCtes: String = {
     def step(win: String, p: String, b: String, wout: String): String =
       s"""$p AS (

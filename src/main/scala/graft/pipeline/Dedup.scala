@@ -42,7 +42,7 @@ object Dedup {
   def minhashNearDup(spark: SparkSession, dir: String): DataFrame =
     minhashNearDupOn(sh = shinglesOf(spark, dir), minJaccard = 0.5)
 
-  private[graft] def shinglesOf(spark: SparkSession, dir: String): DataFrame = {
+  private def shinglesOf(spark: SparkSession, dir: String): DataFrame = {
     Tables.register(spark, dir)
     shingles(spark.table("documents"))
   }
@@ -52,7 +52,7 @@ object Dedup {
     * and cluster layouts) folded into 8 band hashes. One partial-aggregating
     * shuffle on doc_id; this is the signature a production corpus would
     * persist next to the data. */
-  private[graft] def bandsOf(sh: DataFrame): DataFrame = {
+  private def bandsOf(sh: DataFrame): DataFrame = {
     val sigAggs: Seq[Column] =
       (0 until NumHashes).map(i => min(xxhash64(col("g"), lit(i))).as(s"h$i"))
     val sigs = sh.groupBy("doc_id").agg(sigAggs.head, sigAggs.tail: _*)
@@ -419,11 +419,10 @@ object Dedup {
       bandsOf(sh.where(col("doc_id") % 10 =!= 0)), minJaccard)
   }
 
-  /** Core of the incremental path with the signature inputs explicit, so
-    * the scale harness (BenchOne incremental_scale) can pre-materialize the
-    * corpus bands — in production they are READ from the signature store,
-    * not recomputed per batch. */
-  private[graft] def incrementalNearDupFrom(sh: DataFrame, batchBands: DataFrame,
+  /** Core of the incremental path: batch bands join the corpus bands (in
+    * production READ from the signature store, not recomputed per batch)
+    * and each other for candidates; exact Jaccard on `sh` verifies them. */
+  private def incrementalNearDupFrom(sh: DataFrame, batchBands: DataFrame,
       corpusBands: DataFrame, minJaccard: Double): DataFrame = {
     val crossCand = batchBands.as("a")
       .join(corpusBands.as("b"),

@@ -904,7 +904,7 @@ object Ext {
     // O(k·n) distances total, the FPS ideal. Arithmetic is byte-identical
     // to the previous form (same quantization, same integer zip_with fold,
     // same DESC/vec_id tie-break); the DuckDB oracle is unchanged
-    // (Queries.fpsSql(duck = true)), so the driver gate re-proves
+    // (Queries.fpsSql), so the driver gate re-proves
     // equivalence every round. Measured sf0.1 warm: 5.6 -> ~0.9 s.
     "q395_coreset_fps" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
@@ -1187,7 +1187,7 @@ object Ext {
     // q395's oracle is unchanged from its pre-round-14 Queries spec — the
     // Spark side was restructured (materialized FPS rounds, identical
     // integer arithmetic), the DuckDB side re-proves the same result.
-    "q395_coreset_fps" -> graft.Queries.fpsSql(duck = true),
+    "q395_coreset_fps" -> graft.Queries.fpsSql(),
     // q276's oracle, likewise unchanged from its pre-round-14 Queries spec.
     "q276_pagerank" -> graft.Queries.pagerankSql("//"),
     // q46's oracle, likewise unchanged from its pre-round-14 Queries spec.

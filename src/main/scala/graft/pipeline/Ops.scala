@@ -249,14 +249,6 @@ object Ops {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** (profiling seam) the z-valued frame for given boundary sets. */
-  private[graft] def zorderFrame(df: DataFrame, dims: Seq[String],
-      qs: Array[Array[Double]]): DataFrame = {
-    val z = interleaveBits(
-      dims.zip(qs).map { case (d, q) => bucketByQuantiles(col(d), q) }, bits = 8)
-    df.withColumn("__z", z)
-  }
-
   /** Rank bucketing into [0, 2^bits): the bucket is the count of quantile
     * boundaries ≤ x. Quantile-space buckets stay uniformly occupied under
     * skew, where min-max range buckets would collapse onto the dense
