@@ -50,7 +50,7 @@ object BenchAB {
     val priorNode = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(priorPath)))
     val prior: Map[String, Double] = {
       val q = priorNode.get("queries")
-      val it = q.fields()
+      val it = q.properties().iterator()
       val b = Map.newBuilder[String, Double]
       while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
       b.result()

@@ -44,31 +44,24 @@ object Determinism {
     // posture (AQE on) and would silently undo the AQE-off half of run A
     // for that entry — weakening exactly the gate this harness is.
     Tables.register(spark, sfDir)
-    val conf = spark.conf
-    val keepParts = conf.get("spark.sql.shuffle.partitions")
-    val keepAqe = conf.get("spark.sql.adaptive.enabled")
-    try {
-      names.map { name =>
-        val fn = qs(name)
-        try {
-          conf.set("spark.sql.shuffle.partitions", "5")
-          conf.set("spark.sql.adaptive.enabled", "false")
-          val a = collectCanon(fn(spark, sfDir))
-          conf.set("spark.sql.shuffle.partitions", "32")
-          conf.set("spark.sql.adaptive.enabled", "true")
-          val b = collectCanon(fn(spark, sfDir))
-          if (a == b) (name, true, s"${a.size} rows")
-          else {
-            val i = a.zip(b).indexWhere { case (x, y) => x != y }
-            val at = if (i >= 0) i else math.min(a.size, b.size)
-            (name, false, s"rows ${a.size} vs ${b.size}; first diff at row $at: " +
-              s"${a.lift(at).getOrElse("<none>")} vs ${b.lift(at).getOrElse("<none>")}")
-          }
-        } catch { case e: Throwable => (name, false, s"error: ${e.getMessage}") }
+    def run(fn: (SparkSession, String) => DataFrame, parts: Int, aqe: Boolean): Seq[String] =
+      GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString) {
+        collectCanon(fn(spark, sfDir))
       }
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", keepParts)
-      conf.set("spark.sql.adaptive.enabled", keepAqe)
+    names.map { name =>
+      val fn = qs(name)
+      try {
+        val a = run(fn, 5, aqe = false)
+        val b = run(fn, 32, aqe = true)
+        if (a == b) (name, true, s"${a.size} rows")
+        else {
+          val i = a.zip(b).indexWhere { case (x, y) => x != y }
+          val at = if (i >= 0) i else math.min(a.size, b.size)
+          (name, false, s"rows ${a.size} vs ${b.size}; first diff at row $at: " +
+            s"${a.lift(at).getOrElse("<none>")} vs ${b.lift(at).getOrElse("<none>")}")
+        }
+      } catch { case e: Throwable => (name, false, s"error: ${e.getMessage}") }
     }
   }
 

@@ -24,4 +24,17 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Runs `body` with each `key -> value` set on the session conf, then
+    * puts every key back as it was: its previous value, or unset if it had
+    * none (so `spark.conf.getAll` reads the same after as before). Restores
+    * when `body` throws too. */
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -38,7 +38,7 @@ object Preflight {
       }
 
     val basic = diag("select-1") {
-      require(spark.sql("SELECT 1 AS one").head.getInt(0) == 1)
+      require(spark.sql("SELECT 1 AS one").head().getInt(0) == 1)
     }
     val perTable = Tables.tableNames.flatMap { t =>
       diag(s"table:$t") {
@@ -57,7 +57,7 @@ object Preflight {
       c <- cols
     } yield diag(s"time:$table.$c") {
       val r = spark.sql(
-        s"SELECT min(year($c)) AS lo, max(year($c)) AS hi, count($c) AS n FROM $table").head
+        s"SELECT min(year($c)) AS lo, max(year($c)) AS hi, count($c) AS n FROM $table").head()
       require(r.getLong(2) > 0, s"$table.$c normalized to all-null")
       val (lo, hi) = (r.getInt(0), r.getInt(1))
       require(lo >= 1990 && hi <= 2100,

@@ -157,7 +157,7 @@ object Dedup {
     // so the invariant survives id ranges where a bigint sum would overflow.
     def lblSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("lbl").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head.getDecimal(0)
+        .head().getDecimal(0)
     var prevSum = lblSum(labels)
     var changed = true
     var it = 0
@@ -229,7 +229,7 @@ object Dedup {
     def probe(df: DataFrame): (java.math.BigDecimal, Long) = {
       val r = df.agg(
         sum((col("u") + col("v")).cast(DecimalType(38, 0))).as("s"),
-        count(lit(1)).as("c")).head
+        count(lit(1)).as("c")).head()
       (r.getDecimal(0), r.getLong(1))
     }
     var prev = probe(edges)

@@ -192,7 +192,7 @@ object Ops {
     val w = Window.partitionBy(key).orderBy(ordering.map(col(_).desc): _*)
     val last = changes
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-    val payload = snapshot.columns.filter(_ != key)
+    val payload = snapshot.columns.toSeq.filter(_ != key)
     val present = col(s"c.${ordering.head}").isNotNull
     snapshot.as("s").join(last.as("c"), Seq(key), "full_outer")
       .where(when(present, !col(s"c.$deleteFlag")).otherwise(lit(true)))
