@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.SparkSession
 
 /** The one way this repo builds a Spark session: `local[cpus]` with
@@ -24,6 +27,15 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A fresh scratch dir named `prefix<random>` under the temp dir Spark
+    * keeps for its context (`SparkFiles.getRootDirectory()`, inside
+    * `spark.local.dir`), for an entry's files that must outlive the call
+    * only as long as its result: Spark deletes that dir on `stop()` and at
+    * JVM exit, so nothing is left behind in `java.io.tmpdir`. Needs a
+    * running SparkContext. */
+  def scratch(prefix: String): Path =
+    Files.createTempDirectory(Paths.get(SparkFiles.getRootDirectory()), prefix)
 
   /** Runs `body` with each `key -> value` set on the session conf, then
     * puts every key back as it was: its previous value, or unset if it had

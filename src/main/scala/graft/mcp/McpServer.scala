@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 
 /** MCP server over newline-delimited JSON-RPC 2.0 — the reference's entire
   * API surface (SURVEY §3.1): `initialize`, `tools/list`, `tools/call`, with
@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * (shape of /root/reference/tests/redshift/example_usage.py:54-65, protocol
   * flow of /root/reference/tests/postgres/test_mcp.py:50-157).
   *
-  * Spark is the backend: `execute_sql` runs on `spark.sql` behind the
-  * statement-class gate; `list_tables` is the redshift.yaml:11-42 statement
+  * Spark is the backend: each SQL call parses its statement once and runs
+  * that tree, which for `execute_sql` is the tree the statement-class gate
+  * classified; `list_tables` is the redshift.yaml:11-42 statement
   * over the synthesized information_schema views.
   */
 final class McpServer(
@@ -24,35 +25,40 @@ final class McpServer(
     queryTimeoutMs: Long = 0L) {
 
   private val mapper = new ObjectMapper()
-  private val execCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Runs one tool's row collection under the per-query latency ceiling
+  /** Runs one tool's row collection in its own Spark job group,
+    * `graft-mcp-<n>`, whose description names the tool and the JSON-RPC id,
+    * so every job a call starts can be joined back to it. `n` counts calls
+    * across every server in the JVM: groups are SparkContext-wide, and
+    * servers on cloned sessions share one context. The group is set
+    * with `interruptOnCancel`. Under the per-query latency ceiling
     * (`--query-timeout-ms`; 0 = unlimited — the reference's own posture is
     * "no toolbox-added limits", but its test harnesses enforce ceilings, and
-    * a shared server needs the runaway-query kill switch). The collection
-    * runs in its own thread inside a Spark job group with
-    * `interruptOnCancel`; on timeout the whole group is cancelled — tasks
-    * die cluster-wide, not just the client wait — and the server stays
+    * a shared server needs the runaway-query kill switch) the collection
+    * runs in its own thread, and on timeout the whole group is cancelled —
+    * tasks die cluster-wide, not just the client wait — and the server stays
     * serviceable. */
-  private def collectRows(toolName: String, body: => Array[String]): Either[String, Array[String]] =
-    if (queryTimeoutMs <= 0L) Right(body)
+  private def collectRows(toolName: String, id: JsonNode,
+      body: => Array[String]): Either[String, Array[String]] = {
+    val group = s"graft-mcp-${McpServer.calls.incrementAndGet()}"
+    val sc = spark.sparkContext
+    def inGroup(): Array[String] = {
+      sc.setJobGroup(group, s"mcp tool $toolName id $id", interruptOnCancel = true)
+      try body finally sc.clearJobGroup()
+    }
+    if (queryTimeoutMs <= 0L) Right(inGroup())
     else {
       import scala.concurrent.{Await, Future, TimeoutException}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val group = s"graft-mcp-${execCounter.incrementAndGet()}"
-      val sc = spark.sparkContext
-      val fut = Future {
-        sc.setJobGroup(group, s"mcp tool $toolName", interruptOnCancel = true)
-        try body finally sc.clearJobGroup()
-      }
-      try Right(Await.result(fut, queryTimeoutMs.millis))
+      try Right(Await.result(Future(inGroup()), queryTimeoutMs.millis))
       catch {
         case _: TimeoutException =>
           sc.cancelJobGroup(group)
           Left(s"query exceeded the ${queryTimeoutMs} ms limit and was cancelled")
       }
     }
+  }
 
   /** Built-in tools, always present (the "prebuilt" behavior — every backend
     * image provides list_tables + execute_sql, README.md:1716). */
@@ -260,14 +266,14 @@ final class McpServer(
       return response(id, errorContent(
         s"missing required parameter(s) ${missingRequired.sorted.mkString(", ")} for tool $name"))
     try {
-      // DataFrame CONSTRUCTION is deferred into the collectRows timeout
-      // scope below (ADVICE r13): pipeline operators run eager Spark
-      // actions (counts, localCheckpoints) while building their plan, and
-      // q403-style screens spend real work there — outside the job-group
-      // wrapper, --query-timeout-ms could never cancel that portion. Gate
-      // checks and binding stay out here: they are driver-side parsing and
-      // their denials are structured early returns, not query work.
-      val buildDf: () => org.apache.spark.sql.DataFrame =
+      // DataFrame CONSTRUCTION is deferred into the collectRows scope below
+      // (ADVICE r13): pipeline operators run eager Spark actions (counts,
+      // localCheckpoints) while building their plan, and q403-style screens
+      // spend real work there — outside the job group, --query-timeout-ms
+      // could never cancel that portion. Binding, the one parse and the gate
+      // stay out here: they run no Spark job, and their denials are
+      // structured early returns, not query work.
+      val buildDf: () => DataFrame =
         if (tool.kind == "spark-pipeline") {
           // statement names a registered Spark pipeline operator — the
           // extension path for capabilities one SQL statement can't express
@@ -278,18 +284,20 @@ final class McpServer(
           () => PipelineTools.run(tool.statement.trim, spark, dir, args)
         } else {
           val bound = Params.bind(tool.statement, args, tool.params)
-          // Gate caller-supplied SQL: passthrough tools always; any tool whose
-          // statement had {{templates}} executes caller text, so gate those too.
-          if (tool.isPassthrough || tool.statement.contains("{{")) {
-            StatementGate.check(spark, bound.sql) match {
-              case Some(reason) => return response(id, errorContent(reason))
-              case None =>
-            }
-          }
-          () => if (bound.args.nonEmpty) spark.sql(bound.sql, bound.args)
-                else spark.sql(bound.sql)
+          // Parse once, and run the tree that was parsed. Caller-supplied
+          // SQL is gated on that tree: passthrough tools always; any tool
+          // whose statement had {{templates}} executes caller text, so gate
+          // those too.
+          val plan =
+            if (tool.isPassthrough || tool.statement.contains("{{"))
+              StatementGate.plan(spark, bound.sql, bound.args) match {
+                case Left(reason) => return response(id, errorContent(reason))
+                case Right(p) => p
+              }
+            else GraftShims.sqlPlan(spark, bound.sql, bound.args)
+          () => GraftShims.ofRows(spark, plan)
         }
-      val rows = collectRows(name, buildDf().toJSON.take(maxRows)) match {
+      val rows = collectRows(name, id, buildDf().toJSON.take(maxRows)) match {
         case Left(reason) => return response(id, errorContent(reason))
         case Right(r) => r
       }
@@ -373,4 +381,8 @@ final class McpServer(
     e.put("code", code); e.put("message", message)
     mapper.writeValueAsString(r)
   }
+}
+
+object McpServer {
+  private val calls = new java.util.concurrent.atomic.AtomicLong()
 }

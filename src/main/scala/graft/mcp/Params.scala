@@ -2,8 +2,9 @@ package graft.mcp
 
 /** Parameter binding for tool statements — the three styles of the reference
   * (SURVEY §2.B B11–B13):
-  *  - `:name`  named parameters (tests/sqlite/sqlite.yaml:20-22) — passed to
-  *    Spark's parameterized `spark.sql(sql, args)`, never string-spliced;
+  *  - `:name`  named parameters (tests/sqlite/sqlite.yaml:20-22) — bound as
+  *    literals by Spark's parser in `GraftShims.sqlPlan`, never
+  *    string-spliced;
   *  - `$1`     positional (images/redshift/redshift.yaml:28-30) — rewritten
   *    to named `:_p1` ... then bound the same way;
   *  - `{{x}}`  whole-template substitution (tests/sqlite/sqlite.yaml:34) —

@@ -1,6 +1,9 @@
 package graft.mcp
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{IdentifierResolution, PlanWithUnresolvedIdentifier}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Statement-class permission gate (SURVEY §2.A A7): permits read statements
   * (Select / Show / Describe / Explain / Use), denies DDL/DML/DCL/
@@ -8,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * /root/reference/images/snowflake-mcp/entrypoint.sh:211-232 re-expressed
   * over Spark's parsed logical plan instead of a SQL-dialect classifier.
   *
-  * Classification is a pre-execution parse: `parsePlan` builds the unresolved
-  * logical plan; no analysis, no jobs.
+  * The gate classifies the tree that executes: [[plan]] parses once, with
+  * any bound args already substituted, and the caller runs the tree it
+  * returns. Classification looks at the unresolved logical plan only; no
+  * analysis, no jobs.
   */
 object StatementGate {
 
@@ -64,42 +69,56 @@ object StatementGate {
     "parquet", "csv", "json", "orc", "text", "textfile", "binaryfile", "avro",
     "libsvm", "jdbc", "delta")
 
+  /** Parses `sql` with `args` bound (`GraftShims.sqlPlan`) and classifies
+    * that tree: Right(plan) to run through `GraftShims.ofRows`, or
+    * Left(reason) if denied or unparseable. */
+  def plan(spark: SparkSession, sql: String, args: Map[String, Any]): Either[String, LogicalPlan] =
+    try {
+      val p = GraftShims.sqlPlan(spark, sql, args)
+      classify(p).toLeft(p)
+    } catch {
+      case e: Exception => Left(s"parse error: ${e.getMessage}")
+    }
+
   /** Returns None if allowed, Some(reason) if denied. */
   def check(spark: SparkSession, sql: String): Option[String] =
-    try {
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (allowedRoots.contains(plan.getClass.getSimpleName)) None
-      else {
-        var bad: Option[String] = None
-        // Generic constructor-tree walk: `plan.foreach` visits only `children`,
-        // which misses CTE definitions (UnresolvedWith.cteRelations) and
-        // subquery-expression plans (WHERE x IN (SELECT ...)). Every nested
-        // plan is a constructor argument somewhere, so recursing through
-        // Product/Iterable reaches them all (parse trees are acyclic).
-        def visit(a: Any): Unit = a match {
-          case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-              if r.multipartIdentifier.length >= 2 &&
-                fileSourceTokens.contains(r.multipartIdentifier.head.toLowerCase) =>
-            if (bad.isEmpty)
-              bad = Some(s"file-source relation ${r.multipartIdentifier.head}.`...`")
-          case p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-            val n = p.getClass.getSimpleName
-            if (bad.isEmpty && (denied.findFirstIn(n).isDefined || isUnknownCommand(n)))
-              bad = Some(n)
-            if (bad.isEmpty) p.productIterator.foreach(visit)
-          case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-            if (bad.isEmpty && deniedFunctions.contains(f.nameParts.last.toLowerCase))
-              bad = Some(s"function ${f.nameParts.last}")
-            if (bad.isEmpty) f.productIterator.foreach(visit)
-          case p: Product => p.productIterator.foreach(visit)
-          case s: Iterable[_] => s.foreach(visit)
-          case _ => ()
-        }
-        visit(plan)
-        bad.map(n => s"statement class not permitted: $n " +
-          "(only Select/Show/Describe/Explain/Use are allowed)")
+    plan(spark, sql, Map.empty).left.toOption
+
+  private def classify(plan: LogicalPlan): Option[String] =
+    if (allowedRoots.contains(plan.getClass.getSimpleName)) None
+    else {
+      var bad: Option[String] = None
+      // Generic constructor-tree walk: `plan.foreach` visits only `children`,
+      // which misses CTE definitions (UnresolvedWith.cteRelations) and
+      // subquery-expression plans (WHERE x IN (SELECT ...)). Every nested
+      // plan is a constructor argument somewhere, so recursing through
+      // Product/Iterable reaches them all (parse trees are acyclic).
+      def visit(a: Any): Unit = a match {
+        // IDENTIFIER('<name>'), which is what a bound IDENTIFIER(:t) parses
+        // to, stays unexpanded until analysis: build the node it names now,
+        // as the analyzer will, so the relation is classified too.
+        case p: PlanWithUnresolvedIdentifier if p.identifierExpr.isInstanceOf[Literal] =>
+          visit(p.planBuilder(IdentifierResolution.evalIdentifierExpr(p.identifierExpr), p.children))
+        case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+            if r.multipartIdentifier.length >= 2 &&
+              fileSourceTokens.contains(r.multipartIdentifier.head.toLowerCase) =>
+          if (bad.isEmpty)
+            bad = Some(s"file-source relation ${r.multipartIdentifier.head}.`...`")
+        case p: LogicalPlan =>
+          val n = p.getClass.getSimpleName
+          if (bad.isEmpty && (denied.findFirstIn(n).isDefined || isUnknownCommand(n)))
+            bad = Some(n)
+          if (bad.isEmpty) p.productIterator.foreach(visit)
+        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
+          if (bad.isEmpty && deniedFunctions.contains(f.nameParts.last.toLowerCase))
+            bad = Some(s"function ${f.nameParts.last}")
+          if (bad.isEmpty) f.productIterator.foreach(visit)
+        case p: Product => p.productIterator.foreach(visit)
+        case s: Iterable[_] => s.foreach(visit)
+        case _ => ()
       }
-    } catch {
-      case e: Exception => Some(s"parse error: ${e.getMessage}")
+      visit(plan)
+      bad.map(n => s"statement class not permitted: $n " +
+        "(only Select/Show/Describe/Explain/Use are allowed)")
     }
 }

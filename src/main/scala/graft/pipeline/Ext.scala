@@ -207,7 +207,7 @@ object Ext {
         df.agg(count(lit(1)).as("n_docs"), countDistinct(col("text")).as("n_texts"),
             sum("n_chars").cast("long").as("sum_chars"))
           .select(lit(fmt).as("fmt"), col("n_docs"), col("n_texts"), col("sum_chars"))
-      val base = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+      val base = graft.GraftSession.scratch("graft_fmt").toString
       docs.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
       docs.write.mode("overwrite").json(s"$base/json")
       docs.write.mode("overwrite").orc(s"$base/orc")
@@ -228,7 +228,7 @@ object Ext {
       import org.apache.spark.sql.functions._
       graft.Tables.register(s, d)
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val base = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+      val base = graft.GraftSession.scratch("graft_buckets").toString
       val ot = s"g_orders_bkt_$tag"
       val lt = s"g_lineitem_bkt_$tag"
       // repartition(16, key) before the bucketed write: same murmur3+pmod
@@ -450,7 +450,7 @@ object Ext {
     "q258_etl_partitioned_readback" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       graft.Tables.register(s, d)
-      val out = java.nio.file.Files.createTempDirectory("graft_etl_lake").toString
+      val out = graft.GraftSession.scratch("graft_etl_lake").toString
       Ops.writePartitioned(
         s.table("orders").select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"),
         out, Seq("o_orderstatus"))
@@ -468,7 +468,7 @@ object Ext {
     "q260_zorder_readback" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       graft.Tables.register(s, d)
-      val out = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+      val out = graft.GraftSession.scratch("graft_zorder").toString
       Ops.zorderWrite(
         s.table("events").select("event_id", "user_id", "event_type", "value"),
         out, "user_id", "value", nFiles = 16)
@@ -487,7 +487,7 @@ object Ext {
     "q270_schema_evolution" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       graft.Tables.register(s, d)
-      val lake = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+      val lake = graft.GraftSession.scratch("graft_evolve").toString
       val ev = s.table("events")
       ev.where(col("event_type") === "view")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -636,8 +636,8 @@ object Ext {
     "q261_compaction_readback" -> ((s: SparkSession, d: String) => {
       import org.apache.spark.sql.functions._
       graft.Tables.register(s, d)
-      val small = java.nio.file.Files.createTempDirectory("graft_small").toString
-      val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val small = graft.GraftSession.scratch("graft_small").toString
+      val out = graft.GraftSession.scratch("graft_compact").toString
       s.table("events").select("event_id", "event_type", "value")
         .repartition(50).write.mode("overwrite").parquet(small)
       Ops.compact(s, small, out, targetFileBytes = 8L << 20)

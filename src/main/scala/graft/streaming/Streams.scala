@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.GraftSession.withConf
+import graft.GraftSession.{scratch, withConf}
 import graft.Tables
 
 /** Per-user running click totals in a typed ValueState — the q285
@@ -145,13 +145,9 @@ object Streams {
     drain(spark, events, mode, statePartitions(spark, dir), xform)
   }
 
-  /** A fresh per-call root in `java.io.tmpdir` for a file-sink drain's
-    * source copies, staging, checkpoint and sink. */
-  private def scratchRoot(): Path = Files.createTempDirectory("graft_drain")
-
   /** Deletes every child of `root` except `keep`, the dir the returned
     * DataFrame reads, so a finished file-sink drain leaves no source copy,
-    * checkpoint or staging dir behind in tmpdir. */
+    * checkpoint or staging dir behind while the session runs. */
   private def pruneExcept(root: Path, keep: Path): Unit = {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm))
@@ -224,7 +220,7 @@ object Streams {
   private def phasedDrain(spark: SparkSession, dir: String, cutUs: Long, firstOld: Boolean,
       mode: String, conf: Seq[(String, String)], sinkSchema: String)(
       query: DataFrame => DataFrame): DataFrame = {
-    val root = scratchRoot()
+    val root = scratch("graft_drain")
     val (src, out, ckpt) = (root.resolve("src"), root.resolve("out"), root.resolve("ckpt"))
     withConf(spark, (shufflePartitions -> statePartitions(spark, dir).toString) +: conf: _*) {
       val (schema, arriveB2) = writeHalves(spark, dir, src, root.resolve("staging"), cutUs, firstOld)
@@ -691,7 +687,7 @@ object Streams {
     // dirs per call keep reruns deterministic.
     "q255_stream_foreachbatch_drain" -> ((s: SparkSession, d: String) => {
       Tables.register(s, d)
-      val root = scratchRoot()
+      val root = scratch("graft_drain")
       val out = root.resolve("out")
       val schema = Tables.eventsRaw(s, d).schema
       val ev = s.readStream.schema(schema)
@@ -719,7 +715,7 @@ object Streams {
     // over state ∪ batch).
     "q283_stream_cdc_apply" -> ((s: SparkSession, d: String) => {
       Tables.register(s, d)
-      val root = scratchRoot()
+      val root = scratch("graft_drain")
       val src = root.resolve("src").toString
       def snap(v: Int): Path = root.resolve(s"v$v")
       val ev = Tables.eventsTsUs(s, d)
