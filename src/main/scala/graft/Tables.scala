@@ -1,12 +1,22 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Registers the driver's parquet test tables (TESTDATA.md / FIXTURES.md) as
   * temp views, plus synthesized `information_schema_*` views so catalog
   * introspection is queryable as plain SQL (the `list_tables` statement shape
   * of the reference, see `/root/reference/images/redshift/redshift.yaml:11-42`
   * which reads `information_schema.columns`).
+  *
+  * Registration runs no Spark job: each `<table>.parquet` file's schema is
+  * read from its footer on the driver ([[footerSchema]], Spark's own footer
+  * conversion) and handed to `spark.read.schema(...)`, instead of letting
+  * Spark's parquet inference start one footer-reading job per file.
   *
   * Hazard handled here (SURVEY §7.4.1), the round-6 lesson: the driver may
   * REGENERATE fixtures between rounds with a different physical timestamp
@@ -28,7 +38,8 @@ object Tables {
 
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col, expr, unix_micros}
-  import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType,
+    TimestampNTZType, TimestampType}
 
   /** A time column (whatever physical type the fixture carries) →
     * `TimestampType` at µs precision. The single place the physical-type
@@ -54,7 +65,30 @@ object Tables {
   /** Raw events read (physical `ts` type untouched) — streaming callers need
     * the raw schema for `readStream.schema(...)`. */
   def eventsRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
+
+  /** The schema Spark's parquet inference gives the single file `file`,
+    * read from its footer on the driver: Spark's own conversion, so a
+    * Spark-written file's row metadata wins and the session's parquet read
+    * confs (`nanosAsLong` among them) apply as they do to inference. A
+    * `required` column stays non-nullable here; the file source makes every
+    * column nullable on read either way. None when `file` is a directory,
+    * which keeps Spark's inference. */
+  private[graft] def footerSchema(spark: SparkSession, file: String): Option[StructType] = {
+    val path = new Path(file)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val status = path.getFileSystem(conf).getFileStatus(path)
+    if (status.isDirectory) None
+    else {
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(status, conf), SKIP_ROW_GROUPS)
+      Some(ParquetFileFormat.readSchemaFromFooter(new Footer(path, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    }
+  }
+
+  /** One fixture file, read with its footer schema (no inference job). */
+  private def parquet(spark: SparkSession, file: String): DataFrame =
+    footerSchema(spark, file).fold(spark.read)(spark.read.schema).parquet(file)
 
   /** Events with `ts` replaced by `ts_us: BIGINT` (µs since epoch) — the one
     * normalized shape every batch consumer of raw event time uses. */
@@ -68,17 +102,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private case class ColumnMeta(
-      schema_name: String,
-      table_name: String,
-      column_name: String,
-      column_position: Int,
-      data_type: String,
-      is_nullable: String,
-      column_default: String)
-
-  private case class TableMeta(schema_name: String, table_name: String)
-
   // Weakly keyed on the session object (temp views are per-session; a strong
   // key would retain every stopped session's state for the JVM lifetime).
   // Registration happens inside the lock so a concurrent second caller blocks
@@ -89,15 +112,19 @@ object Tables {
   // (a set made that call a no-op and left A's caller reading B's views —
   // caught when a test fixture registration left the info schema pointing
   // at a one-table temp dir).
+  // The dir is compared FS-qualified, without a trailing slash, so two
+  // spellings of one dir (`/x/sf`, `/x/sf/`, a relative path) register once.
   private val registered = new java.util.WeakHashMap[SparkSession, String]()
 
   /** Idempotent per (session, current dir): registers all test tables +
     * info schema; re-registers whenever the requested dir differs from the
     * session's LAST registered dir. */
   def register(spark: SparkSession, dir: String): Unit = registered.synchronized {
-    if (registered.get(spark) != dir) {
+    val p = new Path(dir)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    if (registered.get(spark) != key) {
       doRegister(spark, dir)
-      registered.put(spark, dir)
+      registered.put(spark, key)
     }
   }
 
@@ -116,7 +143,7 @@ object Tables {
     * additionally require `spark.sql.legacy.parquet.nanosAsLong` on the
     * session (set once in [[register]]'s critical section). */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     timeColumns.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.withColumn(c, asTimestamp(c, d.schema(c).dataType))
     }
@@ -128,7 +155,8 @@ object Tables {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // ns-parquet read mode: session-level, set once here (inside register's
-    // lock) rather than on every read() call.
+    // lock) rather than on every read() call, and before any footer schema
+    // is converted, so ns fixtures surface as LongType.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Engine-native functions: this is their only registration path, so a
     // session built elsewhere gets exactly what the served one does.
@@ -150,6 +178,7 @@ object Tables {
         Some(n -> df)
       } catch {
         case e: Throwable =>
+          spark.catalog.dropTempView(n) // not a view of the previous dir either
           val msg = Option(e.getMessage).getOrElse("").linesIterator.take(2).mkString(" / ")
           System.err.println(
             s"[graft.Tables] REGISTRATION FAILED for table '$n' at $dir: " +
@@ -162,10 +191,20 @@ object Tables {
     val cols = for {
       (t, df) <- dfs
       (f, i)  <- df.schema.fields.zipWithIndex
-    } yield ColumnMeta("main", t, f.name, i + 1, f.dataType.simpleString,
+    } yield Row("main", t, f.name, i + 1, f.dataType.simpleString,
       if (f.nullable) "YES" else "NO", null)
-    val tabs = dfs.map { case (t, _) => TableMeta("main", t) }
-    spark.createDataFrame(cols).createOrReplaceTempView("information_schema_columns")
-    spark.createDataFrame(tabs).createOrReplaceTempView("information_schema_tables")
+    val tabs = dfs.map { case (t, _) => Row("main", t) }
+    spark.createDataFrame(java.util.Arrays.asList(cols: _*), infoColumnsSchema)
+      .createOrReplaceTempView("information_schema_columns")
+    spark.createDataFrame(java.util.Arrays.asList(tabs: _*), infoTablesSchema)
+      .createOrReplaceTempView("information_schema_tables")
   }
+
+  private def strings(names: String*): Seq[StructField] = names.map(StructField(_, StringType))
+
+  private val infoColumnsSchema = StructType(strings("schema_name", "table_name", "column_name") ++
+    Seq(StructField("column_position", IntegerType, nullable = false)) ++
+    strings("data_type", "is_nullable", "column_default"))
+
+  private val infoTablesSchema = StructType(strings("schema_name", "table_name"))
 }

@@ -2,6 +2,8 @@ package graft.mcp
 
 import java.io.BufferedReader
 
+import org.apache.spark.sql.SparkSession
+
 /** Parsed launch options: `dataDir` already has CLI-over-env precedence
   * applied (the reference's rule — entrypoint CLI args beat env vars,
   * /root/reference/images/snowflake-mcp/entrypoint.sh:104-190). */
@@ -94,15 +96,38 @@ object Main {
     val toolsFile = launch.toolsFile
     val dataDir = launch.dataDir
 
+    val t0 = System.nanoTime()
     val spark = graft.GraftSession.create(sessionConf)
+    val sessionMs = (System.nanoTime() - t0) / 1000000
 
     val config = toolsFile.map(Config.loadFile).getOrElse(ToolboxConfig(Nil, Nil))
-    dataDir.foreach(d => graft.Tables.register(spark, d))
-    config.registerSources(spark)
+    register(spark, dataDir, config, sessionMs, System.err)
 
     val server = new McpServer(spark, config, queryTimeoutMs = launch.queryTimeoutMs)
     serve(server, new BufferedReader(new java.io.InputStreamReader(System.in)), System.out)
     spark.stop()
+  }
+
+  /** Registers `dataDir` and the config's sources on `spark`, then prints
+    * one startup line to `log` (stderr when served; stdout is the JSON-RPC
+    * channel): the session build and registration ms, the tables now
+    * registered (every temp view but the `information_schema_*` ones) and
+    * the fixture tables a dataset dir failed to register (`-` if none):
+    *
+    *   [graft.mcp.Main] startup session_ms=812 register_ms=1930 tables=10 skipped=-
+    */
+  def register(spark: SparkSession, dataDir: Option[String], config: ToolboxConfig,
+      sessionMs: Long, log: java.io.PrintStream): Unit = {
+    val t0 = System.nanoTime()
+    dataDir.foreach(d => graft.Tables.register(spark, d))
+    config.registerSources(spark)
+    val registerMs = (System.nanoTime() - t0) / 1000000
+    val views = spark.sessionState.catalog.getTempViewNames().toSet
+    val tables = views.count(!_.startsWith("information_schema_"))
+    val fixtures = dataDir.nonEmpty || config.datasetDir.nonEmpty
+    val skipped = if (fixtures) graft.Tables.tableNames.filterNot(views) else Nil
+    log.println(s"[graft.mcp.Main] startup session_ms=$sessionMs register_ms=$registerMs " +
+      s"tables=$tables skipped=${if (skipped.isEmpty) "-" else skipped.mkString(",")}")
   }
 
   /** Newline-delimited JSON-RPC loop; responses flushed per message. */

@@ -121,8 +121,8 @@ object Streams {
 
   /** Streaming drain over a time-free fixture TABLE (`documents`,
     * `embeddings`), read from `<table>.parquet`. The schema comes from the
-    * registered view (analysis-time metadata, no extra footer-read job per
-    * drain). */
+    * registered view, which `Tables` built from the file's footer on the
+    * driver (no Spark job). */
   private def drainTable(spark: SparkSession, dir: String, table: String, mode: String)(
       xform: DataFrame => DataFrame): DataFrame = {
     Tables.register(spark, dir)
@@ -136,7 +136,7 @@ object Streams {
   private def drainEvents(spark: SparkSession, dir: String, mode: String)(
       xform: DataFrame => DataFrame): DataFrame = {
     Tables.register(spark, dir) // session posture (nanosAsLong, UTC, AQE)
-    val schema = Tables.eventsRaw(spark, dir).schema // physical ts type varies by fixture vintage
+    val schema = Tables.eventsRaw(spark, dir).schema // footer-read on the driver; ts type varies by vintage
     // FileStreamSource wants a directory; select just the events file from
     // the shared testdata dir with a glob filter.
     val events = spark.readStream.schema(schema)
@@ -178,7 +178,7 @@ object Streams {
     * half lands in `src` as b1.parquet immediately; the phase-2 half is
     * staged and only MOVED into `src` by the returned thunk, so its
     * "arrival" still happens between the drains. Also returns the data
-    * schema (from the plan, no footer re-read job). */
+    * schema (from the plan: the written halves are never re-inferred). */
   private def writeHalves(spark: SparkSession, dir: String, src: Path, staging: Path,
       cutUs: Long, firstOld: Boolean): (StructType, () => Unit) = {
     val ev = Tables.eventsTsUs(spark, dir)
@@ -215,8 +215,10 @@ object Streams {
     * partitions of per-batch store commits), and at fixture scale every
     * extra partition is store-open/commit overhead; every phased entry's
     * final answer is partitioning-invariant (the oracle re-proves it). The
-    * sink is read back with `sinkSchema` (no footer-read job) and planned at
-    * the session default. Only the sink dir outlives the call. */
+    * sink is read back with `sinkSchema` (no schema-inference job over the
+    * sink's files) and planned at the session default. Only the sink dir
+    * outlives the call. The events source's schema, like every fixture's, is
+    * read from its footer on the driver by `Tables`. */
   private def phasedDrain(spark: SparkSession, dir: String, cutUs: Long, firstOld: Boolean,
       mode: String, conf: Seq[(String, String)], sinkSchema: String)(
       query: DataFrame => DataFrame): DataFrame = {

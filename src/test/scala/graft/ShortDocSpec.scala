@@ -13,7 +13,8 @@ package graft
 class ShortDocSpec extends SparkSpec {
 
   private lazy val shortDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shortdoc").toString
+    spark // the scratch dir lives under the running context's temp dir
+    val dir = GraftSession.scratch("graft_shortdoc").toString
     val mk = (id: Long, text: String) =>
       (id, text, "en", s"src${id % 3}", text.length.toLong)
     val long1 = "the quick brown fox jumps over the lazy dog again and again"

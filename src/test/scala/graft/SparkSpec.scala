@@ -9,8 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   // Fixed at 4 so plan-shape assertions don't depend on the host's width;
   // a private warehouse so bucketed-table specs never touch the checkout.
-  lazy val spark: SparkSession = GraftSession.create(Map("spark.sql.warehouse.dir" ->
-    java.nio.file.Files.createTempDirectory("graft_wh").toString), cpus = 4)
+  // It must exist before the session (so it cannot be a `GraftSession.scratch`
+  // dir) and is deleted at JVM exit.
+  lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
+    GraftSession.create(Map("spark.sql.warehouse.dir" -> warehouse.toString), cpus = 4)
+  }
   val sfDir = "/root/testdata/sf0.001"
 }
 

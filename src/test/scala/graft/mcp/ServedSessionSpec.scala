@@ -35,4 +35,32 @@ class ServedSessionSpec extends SparkSpec {
         |       dot_product(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d""".stripMargin).head
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12 && math.abs(r.getDouble(1) - 11.0) < 1e-12)
   }
+
+  test("the server's startup line reports registered and skipped tables and both timings") {
+    // a scratch dataset dir: nine fixtures plus a corrupt events file
+    val dir = graft.GraftSession.scratch("graft_startup")
+    for (t <- Tables.tableNames if t != "events")
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"$t.parquet"),
+        java.nio.file.Paths.get(sfDir, s"$t.parquet"))
+    java.nio.file.Files.writeString(dir.resolve("events.parquet"), "this is not parquet")
+    val buf = new java.io.ByteArrayOutputStream()
+    val log = new java.io.PrintStream(buf, true, "UTF-8")
+    val fresh = spark.newSession()
+    Main.register(fresh, Some(dir.toString), ToolboxConfig(Nil, Nil), 812L, log)
+    val lines = buf.toString("UTF-8").linesIterator.toSeq
+    assert(lines.size == 1, lines)
+    val Line = """\[graft\.mcp\.Main\] startup session_ms=(\d+) register_ms=(\d+) tables=(\d+) skipped=(\S+)""".r
+    lines.head match {
+      case Line(sessionMs, registerMs, tables, skipped) =>
+        assert(sessionMs == "812")
+        assert(registerMs.toLong >= 0)
+        assert(tables == "9")
+        assert(skipped == "events")
+      case other => fail(s"unexpected startup line: $other")
+    }
+    // a healthy dir: all ten registered, none skipped
+    buf.reset()
+    Main.register(spark.newSession(), Some(sfDir), ToolboxConfig(Nil, Nil), 1L, log)
+    assert(buf.toString("UTF-8").trim.endsWith(" tables=10 skipped=-"), buf.toString("UTF-8"))
+  }
 }

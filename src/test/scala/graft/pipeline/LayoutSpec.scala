@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.GraftSession.scratch
 
 /** Data-layout tests: Z-order clustering must (a) preserve semantics and
   * (b) actually deliver the 2-D file-skipping it exists for — measured from
@@ -32,9 +31,9 @@ class LayoutSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), col("value"))
     val nFiles = 64
 
-    val zDir = Files.createTempDirectory("layout_z").toString
-    val uDir = Files.createTempDirectory("layout_u").toString
-    val vDir = Files.createTempDirectory("layout_v").toString
+    val zDir = scratch("layout_z").toString
+    val uDir = scratch("layout_u").toString
+    val vDir = scratch("layout_v").toString
     Ops.zorderWrite(ev, zDir, "user_id", "value", nFiles)
     ev.repartitionByRange(nFiles, col("user_id")).sortWithinPartitions("user_id")
       .write.mode("overwrite").parquet(uDir)
@@ -79,10 +78,10 @@ class LayoutSpec extends SparkSpec {
         expr("unix_micros(ts)").as("us"))
     val nFiles = 64
     val dims = Seq("user_id", "value", "us")
-    val zDir = Files.createTempDirectory("layout_z3").toString
+    val zDir = scratch("layout_z3").toString
     Ops.zorderWriteN(ev, zDir, dims, nFiles)
     val sortDirs = dims.map { d =>
-      val dir = Files.createTempDirectory(s"layout_s_$d").toString
+      val dir = scratch(s"layout_s_$d").toString
       ev.repartitionByRange(nFiles, col(d)).sortWithinPartitions(d)
         .write.mode("overwrite").parquet(dir)
       dir
@@ -116,8 +115,8 @@ class LayoutSpec extends SparkSpec {
 
   test("compaction sizes output files from on-disk bytes and preserves content") {
     Tables.register(spark, sfDir)
-    val small = Files.createTempDirectory("compact_in").toString
-    val out = Files.createTempDirectory("compact_out").toString
+    val small = scratch("compact_in").toString
+    val out = scratch("compact_out").toString
     spark.table("events").select("event_id", "event_type", "value")
       .repartition(50).write.mode("overwrite").parquet(small)
     def parquetFiles(d: String) =
